@@ -58,36 +58,6 @@ def merge_upsert(
     return merged.select(*out_cols)
 
 
-def dedup_for_merge(new: DataFrame, *, key: str | list[str], order_col: str) -> DataFrame:
-    """Pre-MERGE duplicate suppression: keep the LAST row per key in ingest
-    order — the sequential loop's implicit behavior when a sheet repeats a
-    key (second occurrence hits the update path,
-    ``staffing-roster-pipeline.py:275-279``)."""
-    from ibc_spark.ops.mutate import last_write_wins
-
-    return last_write_wins(new, key=key, order_col=order_col)
-
-
-def conflict_quarantine(new: DataFrame, *, key: str | list[str], order_col: str) -> DataFrame:
-    """Rows that would violate the unique key (all but the surviving row per
-    key) as E001 quarantine rows — engine replacement for the pg 23505
-    handler (``staffing-roster-pipeline.py:146-151``)."""
-    from pyspark.sql import Window
-
-    keys = [key] if isinstance(key, str) else list(key)
-    w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
-    losers = (
-        new.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") > 1).drop("__rn")
-    )
-    return losers.select(
-        F.to_json(F.struct(*new.columns)).alias("source_row"),
-        F.lit(E_DATA_CONFLICT).alias("error_code"),
-        F.concat(
-            F.lit("duplicate key: "), F.concat_ws("|", *[F.col(k) for k in keys])
-        ).alias("reason"),
-    )
-
-
 def _quote_ident(name: str) -> str:
     """ANSI double-quoted identifier (SQLite/Postgres), embedded quotes
     doubled — sheet-derived column names are routinely reserved words
@@ -286,14 +256,6 @@ def write_parquet(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def job_metrics(**counts: int) -> str:
-    """K8 — the reference's stdout summary JSON
-    (``staffing-roster-pipeline.py:303-304``)."""
-    import json
-
-    return json.dumps(counts)
 
 
 def compact_parquet(

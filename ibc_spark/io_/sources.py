@@ -3,10 +3,11 @@
 The reference ingests a JSON array of row-objects over HTTP
 (``staffing-roster-pipeline.py:75-87``, ``projects-pipeline.py:39-50``) with
 dynamic, human-readable headers. The engine's equivalent is
-:func:`dataframe_from_rows`: an explicit-schema createDataFrame over already
-fetched rows (any transport), permissive about missing keys — schema-on-read
-without the single-threaded HTTP coupling. Parquet is the native analytics
-format (``spark.read.parquet``); filters/column pruning push into the scan.
+:func:`dataframe_from_rows`: an Arrow-backed, explicit-schema
+createDataFrame over already fetched rows (any transport), permissive about
+missing keys — schema-on-read without the single-threaded HTTP coupling.
+Parquet is the native analytics format (``spark.read.parquet``);
+filters/column pruning push into the scan.
 """
 
 from __future__ import annotations
@@ -91,26 +92,36 @@ def dataframe_from_rows(
     reference HTTP source S1/S2). Missing keys become NULL; unknown keys are
     preserved (union schema). Values are stringified like a sheet export.
 
+    The rows are converted in this process into one ``pyarrow.Table`` in the
+    schema's Arrow layout, so the plan starts from an in-memory
+    ``LocalTableScan`` rather than a pickled Python RDD (``Scan
+    ExistingRDD``), which every action would re-deserialize in Python
+    workers. Typed fields of an explicit schema pass through unconverted; a
+    value of the wrong type raises pyarrow's ``ArrowInvalid`` (or
+    ``ArrowTypeError``) here, at ingest, rather than a ``PySparkTypeError``.
+
     At scale the same contract is served by ``spark.read.schema(s).json(path)``
     with ``mode=PERMISSIVE`` + ``columnNameOfCorruptRecord`` — this helper is
-    the in-memory fixture path used by tests and small batch ingests.
+    the in-memory path used by tests and small batch ingests.
     """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     schema = schema or union_schema(rows)
+    arrow_schema = to_arrow_schema(schema)
 
-    def norm(value: object, field: T.StructField) -> object:
-        if value is None:
-            return None
-        # sheet parity: STRING fields stringify like a sheet export; typed
-        # fields (an explicit non-string schema) pass through for
-        # createDataFrame's own validation
+    def column(field: T.StructField) -> list[object]:
+        values = [row.get(field.name) for row in rows]
+        # sheet parity: STRING fields stringify like a sheet export
         if isinstance(field.dataType, T.StringType):
-            return str(value)
-        return value
+            return [None if v is None else str(v) for v in values]
+        return values
 
-    normalized = [
-        tuple(norm(row.get(f.name), f) for f in schema) for row in rows
-    ]
-    return spark.createDataFrame(normalized, schema)
+    table = pa.Table.from_arrays(
+        [pa.array(column(f), type=t) for f, t in zip(schema, arrow_schema.types)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def _default_transport(url: str, timeout: float) -> bytes:

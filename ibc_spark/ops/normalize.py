@@ -97,13 +97,15 @@ def rename_columns(df: DataFrame, rename: Mapping[str, str], *, keep_rest: bool 
     drop happens once, visibly, at normalize time). Mapped headers absent
     from the input become NULL columns — ``row.get(header)`` semantics, so
     ragged sheets don't fail downstream."""
+    have = df.columns
+    present = set(have)
     cols: list[Column] = [
-        (F.col(f"`{src}`") if src in df.columns else F.lit(None).cast("string")).alias(dst)
+        (F.col(f"`{src}`") if src in present else F.lit(None).cast("string")).alias(dst)
         for src, dst in rename.items()
     ]
     if keep_rest:
         mapped = set(rename)
-        cols += [F.col(f"`{c}`") for c in df.columns if c not in mapped]
+        cols += [F.col(f"`{c}`") for c in have if c not in mapped]
     return df.select(*cols)
 
 
@@ -114,17 +116,18 @@ def coalesce_headers(
     non-blank among its accepted source headers, else NULL. Unknown source
     columns pass through (the reference preserves extra keys,
     ``projects-pipeline.py:79-82``)."""
+    have = df.columns
     out: list[Column] = []
     consumed: set[str] = set()
     for target, candidates in key_map.items():
-        present = [c for c in candidates if c in df.columns]
+        present = [c for c in candidates if c in have]
         consumed.update(present)
         if present:
             out.append(F.coalesce(*[nullif_blank(F.col(f"`{c}`")) for c in present]).alias(target))
         else:
             out.append(F.lit(None).cast("string").alias(target))
     if keep_rest:
-        out += [F.col(f"`{c}`") for c in df.columns if c not in consumed]
+        out += [F.col(f"`{c}`") for c in have if c not in consumed]
     return df.select(*out)
 
 

@@ -1,10 +1,11 @@
-"""Reshape operators — A2 availability pivot and U3/K7 unpivot (SURVEY §2.4).
+"""Reshape operators — A2 availability matrix and U3/K7 unpivot (SURVEY §2.4).
 
 The reference's one real reshape is ``build_availability_sql_columns``
 (``staffing-roster-pipeline.py:89-115``): 30 sheet time-slot columns whose
 cells are comma-separated day lists → 7 per-day 30-bit availability
-bitstrings. Per-row Python there; here a pure DataFrame wide→long→wide plan
-(melt → explode → conditional agg), no UDF, fully partition-parallel.
+bitstrings. Per-row Python there; here a row-local projection (tokenize each
+slot cell once, then one bitstring per day), no UDF, no shuffle, fully
+partition-parallel.
 """
 
 from __future__ import annotations
@@ -12,97 +13,74 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ibc_spark.ops.scalars import bits_to_string, split_trim_lower
-
 DAYS = ("monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday")
 DAY_SHORT = ("mon", "tue", "wed", "thu", "fri", "sat", "sun")
 
 
-def availability_pivot(
+def slots_to_availability(
     df: DataFrame,
     *,
-    key: str,
     slot_cols: list[str] | None = None,
     slot_marker: str = "GMT-0600",
     n_slots: int = 30,
 ) -> DataFrame:
-    """A2 — slot×day availability matrix → 7 bitstring columns.
+    """A2 — replace the slot columns by the slot×day availability matrix:
+    7 bitstring columns ``availability_{mon..sun}``, appended.
 
     Slot discovery: the reference takes slot columns from the FIRST row and
     assumes exactly 30 (``:90-93`` — >30 would IndexError). Here the slot
     list comes from the schema (sound for ragged input) and is validated
     loudly. Slot index = lexicographic rank of the column name (``:92``).
     Unknown day tokens are ignored (``:100-113``); day match is
-    case-insensitive after trim.
+    case-insensitive after trim. Bits past the last slot column are ``0``.
 
-    Plan shape: melt (wide→long, no shuffle) → explode day lists →
-    groupBy(key) with 7 conditional ``max(slot bit)`` aggregations — ONE
-    shuffle on ``key``, map-side partial aggregation, no pivot() (which
-    needs either a value scan or a static list; the day list is static so
-    conditional agg is cheaper and keeps the plan fully codegen'd).
+    Plan shape: two narrow projections. The first tokenizes every slot cell
+    once into ``array<array<string>>``; the second maps that array to one
+    ``'0'/'1'`` string per day, right-padded to ``n_slots``. Each row's bits
+    depend only on its own cells, so there is no explode, no shuffle and no
+    join back to the input.
     """
     if slot_cols is None:
         slot_cols = [c for c in df.columns if slot_marker in c]
     slot_cols = sorted(slot_cols)
-    if not slot_cols:
-        # Reference behavior: no slot columns → all-zero availability, not a
-        # failure (empty slot list at ``staffing-roster-pipeline.py:90-93``).
-        zeros = "0" * n_slots
-        return df.select(key).dropDuplicates().select(
-            key, *[F.lit(zeros).alias(f"availability_{short}") for short in DAY_SHORT]
-        )
     if len(slot_cols) > n_slots:
         raise ValueError(
             f"{len(slot_cols)} slot columns exceed the {n_slots}-slot layout: {slot_cols}"
         )
+    if not slot_cols:
+        # Reference behavior: no slot columns → all-zero availability, not a
+        # failure (empty slot list at ``staffing-roster-pipeline.py:90-93``).
+        zeros = F.lit("0" * n_slots)
+        return df.withColumns({f"availability_{short}": zeros for short in DAY_SHORT})
 
-    # wide → long: (key, slot_idx, cell). melt is a zero-shuffle narrow op.
-    long = df.select(
-        F.col(key),
-        F.posexplode(F.array(*[F.col(c) for c in slot_cols])).alias("slot_idx", "cell"),
+    # ``split_trim_lower`` semantics for every non-empty token: trimming the
+    # cell and the spaces around each comma trims every token, and lowering
+    # the cell lowers every token. Empty tokens are kept, but no day name
+    # matches them. Each column is one SQL expression, so building the plan
+    # takes a few JVM calls rather than a dozen per slot cell.
+    tokens = df.withColumn(
+        "__slots",
+        F.expr(
+            "array("
+            + ", ".join(f"split(lower(trim({_ident(c)})), ' *, *')" for c in slot_cols)
+            + ")"
+        ),
     )
-    # cell → one row per (key, slot_idx, day)
-    days = long.select(
-        key, "slot_idx", F.explode(split_trim_lower(F.col("cell"))).alias("day")
-    ).where(F.col("day").isin(*DAYS))
 
-    # long → wide: per day, collect the slot-index set, then expand it to a
-    # fixed-width bit vector (no aggregate inside the lambda — that shape
-    # breaks codegen; set-collection then membership-expansion is the
-    # partial-agg-friendly form).
-    agged = days.groupBy(key).agg(
-        *[
-            F.collect_set(F.when(F.col("day") == day, F.col("slot_idx"))).alias(
-                f"__set_{short}"
-            )
-            for day, short in zip(DAYS, DAY_SHORT)
-        ]
-    )
-    def _bits(col_name: str) -> Column:
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(n_slots - 1)),
-            lambda i: F.array_contains(F.col(col_name), i),
-        )
+    def bits(day: str) -> Column:
+        # a NULL cell tokenizes to NULL; array_contains(NULL, day) is NULL → '0'
+        flags = f"transform(__slots, toks -> if(array_contains(toks, '{day}'), '1', '0'))"
+        return F.expr(f"rpad(array_join({flags}, ''), {n_slots}, '0')")
 
-    out = agged.select(
-        key,
-        *[
-            bits_to_string(_bits(f"__set_{short}")).alias(f"availability_{short}")
-            for short in DAY_SHORT
-        ],
-    )
-    # Rows with no parseable availability still need the all-zero columns.
-    zeros = "0" * n_slots
-    base = df.select(key).dropDuplicates()
-    return base.join(out, on=key, how="left").select(
-        key,
-        *[
-            F.coalesce(F.col(f"availability_{short}"), F.lit(zeros)).alias(
-                f"availability_{short}"
-            )
-            for short in DAY_SHORT
-        ],
-    )
+    return tokens.withColumns(
+        {f"availability_{short}": bits(day) for day, short in zip(DAYS, DAY_SHORT)}
+    ).drop("__slots", *slot_cols)
+
+
+def _ident(name: str) -> str:
+    """Backtick-quoted SQL identifier (sheet headers hold spaces and
+    parentheses)."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def unpivot_columns(

@@ -184,8 +184,10 @@ def run(raw: DataFrame, users: DataFrame, consultants: DataFrame, projects: Data
         value_name="user_id",
     ).select("project_id", "user_id", "role")
 
-    quarantine = quarantine_frame(split.quarantine).unionByName(
-        quarantine_frame(dangling_q)
+    # ``_row_idx`` is engine-internal (its value depends on partitioning), so
+    # it stays out of the quarantined source row.
+    quarantine = quarantine_frame(split.quarantine.drop("_row_idx")).unionByName(
+        quarantine_frame(dangling_q.drop("_row_idx"))
     )
     metrics = (
         good.agg(F.count(F.lit(1)).alias("valid_rows"))

@@ -2,8 +2,8 @@
 ``staffing-roster-pipeline.py:226-310``), as one declarative dataset job:
 
     raw sheet rows
-      → normalize (P2 rename)
-      → availability matrix (A2 pivot)
+      → normalize (P2 rename; slot cells kept)
+      → availability matrix (A2, row-local projection of the slot cells)
       → validate + quarantine (F1/F3, E003)
       → dedup by email, last-write-wins (sequential-loop parity)
       → key resolution against current users (J1) + surrogate keys
@@ -32,14 +32,14 @@ from ibc_spark.ops.normalize import (
     ROSTER_RENAME,
     USERS_COLS,
     rename_columns,
-    split_allowlists,
 )
-from ibc_spark.ops.reshape import DAY_SHORT, availability_pivot
+from ibc_spark.ops.reshape import DAY_SHORT, slots_to_availability
 from ibc_spark.ops.scalars import nullif_blank, parse_boolean, surrogate_key
 from ibc_spark.ops.validate import quarantine_frame, validate_split
 
 REQUIRED = ["name", "email", "curr_role", "netid", "major"]
 BOOLEAN_COLS = ("us_citizen", "residency", "first_gen", "week_before_finals_availability")
+NULLIF_BLANK_COLS = ("gender", "race", "minor", "college", "time_zone", "status")
 AVAIL_COLS = tuple(f"availability_{d}" for d in DAY_SHORT)
 
 
@@ -75,30 +75,47 @@ def run(
     if strict_empty and raw.isEmpty():
         raise EmptySheetError("E005: sheet returned no rows")
     raw = raw.withColumn("_row_idx", F.monotonically_increasing_id())
+    slot_cols = [c for c in raw.columns if slot_marker in c]
 
-    # A2 — availability matrix, joined back on the row id (one shuffle).
-    avail = availability_pivot(raw, key="_row_idx", slot_marker=slot_marker)
-    canon = rename_columns(raw, {**ROSTER_RENAME, "_row_idx": "_row_idx"})
-    canon = canon.join(avail, on="_row_idx", how="left")
+    # P2 — canonical columns, slot cells kept for A2. Both sides of the
+    # validation split read this batch, so it is cached here.
+    canon = rename_columns(
+        raw, {**ROSTER_RENAME, **{c: c for c in ("_row_idx", *slot_cols)}}
+    ).cache()
+
+    # A2 — availability matrix, a row-local projection of the slot cells.
+    # Above the cache, executors evaluate it in generated code; directly on
+    # an in-memory sheet, the optimizer would fold it into the sheet while
+    # planning, row by row, in interpreted mode.
+    canon = slots_to_availability(canon, slot_cols=slot_cols)
 
     # F1/F3 — validate, split, quarantine with reference reason strings.
-    split = validate_split(canon, REQUIRED, cache=True)
-    quarantine = quarantine_frame(split.quarantine)
+    # ``_row_idx`` is engine-internal (its value depends on partitioning), so
+    # it stays out of the quarantined source row.
+    split = validate_split(canon, REQUIRED)
+    quarantine = quarantine_frame(split.quarantine.drop("_row_idx"))
     valid = split.valid
 
-    # X1/X2 — type normalization on the valid side.
-    for c in BOOLEAN_COLS:
-        valid = valid.withColumn(c, parse_boolean(c))
-    for c in ("gender", "race", "minor", "college", "time_zone", "status"):
-        if c in valid.columns:
-            valid = valid.withColumn(c, nullif_blank(c))
-    valid = valid.withColumn(
-        "semesters_in_ibc", F.coalesce(F.col("semesters_in_ibc").cast("int"), F.lit(0))
+    # X1/X2 — type normalization on the valid side (the rename map yields
+    # every column, so all of them exist).
+    valid = valid.withColumns(
+        {
+            **{c: parse_boolean(c) for c in BOOLEAN_COLS},
+            **{c: nullif_blank(c) for c in NULLIF_BLANK_COLS},
+            "semesters_in_ibc": F.coalesce(
+                F.col("semesters_in_ibc").cast("int"), F.lit(0)
+            ),
+        }
     )
 
     # Duplicate emails: the reference applies rows sequentially, so the last
     # occurrence's values win (insert-then-update). One window, same result.
-    valid = last_write_wins(valid, key="email", order_col="_row_idx")
+    # The deduplicated batch is cached: the metrics and both merges read it.
+    # Keep the cache below the broadcast join: a cache build holding both
+    # that broadcast and the window's shuffle numbers its generated code by
+    # which of them finishes first, so each batch would compile parts of
+    # the same plans again.
+    valid = last_write_wins(valid, key="email", order_col="_row_idx").cache()
 
     # J1 — resolve existing keys by email; new emails get deterministic keys.
     existing = users.select(F.col("email"), F.col("user_id").alias("__existing_id"))
@@ -108,7 +125,6 @@ def run(
             "user_id", F.coalesce(F.col("__existing_id"), surrogate_key("email"))
         )
         .drop("__existing_id")
-        .cache()
     )
 
     # K1/K3 — users MERGE on email (key excluded from updates by construction).

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from tests import fixtures
 
 
@@ -67,12 +65,11 @@ class TestStaffingRoster:
     def test_first_row_availability_parsing(self, spark):
         """A2 semantics on the winning-row-only frame: day lists, trim,
         case-insensitivity, unknown-day drop."""
-        from ibc_spark.ops.reshape import availability_pivot
+        from ibc_spark.ops.reshape import slots_to_availability
         from ibc_spark.io_.sources import dataframe_from_rows
 
         rows = [fixtures.roster_rows()[0]]
-        df = dataframe_from_rows(spark, rows).withColumn("_k", F.lit(1))
-        out = availability_pivot(df, key="_k").collect()[0]
+        out = slots_to_availability(dataframe_from_rows(spark, rows)).collect()[0]
         mon = out["availability_mon"]
         wed = out["availability_wed"]
         fri = out["availability_fri"]
@@ -80,6 +77,109 @@ class TestStaffingRoster:
         assert fri[1] == "1"  # slot 2 " Friday " trimmed
         assert fri[29] == "1"  # slot 30 "friday" case-folded; "Funday" ignored
         assert mon.count("1") == 1 and wed.count("1") == 1 and fri.count("1") == 2
+
+    def test_quarantine_source_row_has_no_engine_row_id(self, spark):
+        """FIXTURES.md §4: ``source_row`` is the original row, so the
+        partitioning-dependent ingest row id must not leak into it."""
+        import json
+
+        rows = self._run(spark).quarantine.collect()
+        assert rows
+        for r in rows:
+            src = json.loads(r["source_row"])
+            assert "_row_idx" not in src, src
+            assert "email" in src
+
+
+def _reference_availability(row: dict, slot_cols: list[str]) -> dict[str, str]:
+    """Pure-Python port of the reference ``build_availability_sql_columns``
+    (``staffing-roster-pipeline.py:89-115``), with the slot columns passed
+    in (the engine takes them from the schema, not the first row)."""
+    from ibc_spark.ops.reshape import DAY_SHORT, DAYS
+
+    bits = {short: ["0"] * 30 for short in DAY_SHORT}
+    by_name = dict(zip(DAYS, DAY_SHORT))
+    for i, slot in enumerate(sorted(slot_cols)):
+        cell = row.get(slot)
+        if not cell:
+            continue
+        for day in cell.split(","):
+            short = by_name.get(day.strip().lower())
+            if short:
+                bits[short][i] = "1"
+    return {f"availability_{s}": "".join(b) for s, b in bits.items()}
+
+
+class TestAvailability:
+    """``slots_to_availability`` against the reference semantics on seeded
+    ragged sheets: missing slot columns, NULL cells, case and whitespace,
+    unknown and empty day tokens. Whitespace means spaces: Spark's ``trim``
+    strips only spaces, where the reference's ``str.strip`` also strips tabs
+    and newlines (a known gap of ``split_trim_lower``, not exercised here)."""
+
+    TOKENS = [
+        "Monday", "monday", " TUESDAY ", "Wednesday", "thursday ", " Friday",
+        "saturday", "SUNDAY", "Funday", "", " ", "mon", "  sunday  ",
+    ]
+
+    def _sheet(self, seed: int) -> tuple[list[dict], list[str]]:
+        import random
+
+        rng = random.Random(seed)
+        n_slots = rng.choice([1, 7, 29, 30])
+        slots = [f"{rng.randrange(100):02d}:{i:02d} (GMT-0600)" for i in range(n_slots)]
+        slots[0] = "a `quoted`.slot (GMT-0600)"  # headers are free text
+        rows = []
+        for k in range(40):
+            row = {"id": str(k), "Name": f"p{k}"}
+            for slot in slots:
+                r = rng.random()
+                if r < 0.15:
+                    continue  # key missing from this row (ragged sheet)
+                if r < 0.25:
+                    row[slot] = None
+                else:
+                    n = rng.randint(0, 4)
+                    row[slot] = ",".join(rng.choice(self.TOKENS) for _ in range(n))
+            rows.append(row)
+        return rows, slots
+
+    def test_matches_reference_port(self, spark):
+        from ibc_spark.io_.sources import dataframe_from_rows
+        from ibc_spark.ops.reshape import slots_to_availability
+
+        for seed in range(4):
+            rows, slots = self._sheet(seed)
+            df = dataframe_from_rows(spark, rows)
+            got = {r["id"]: r.asDict() for r in slots_to_availability(df).collect()}
+            for row in rows:
+                want = _reference_availability(row, slots)
+                have = {k: got[row["id"]][k] for k in want}
+                assert have == want, (seed, row)
+
+    def test_no_slot_columns_all_zeros(self, spark):
+        from ibc_spark.io_.sources import dataframe_from_rows
+        from ibc_spark.ops.reshape import slots_to_availability
+
+        df = dataframe_from_rows(spark, [{"Name": "a"}, {"Name": "b"}])
+        out = slots_to_availability(df).collect()
+        assert len(out) == 2
+        for r in out:
+            assert r["Name"] in ("a", "b")
+            assert r.asDict() == {
+                "Name": r["Name"],
+                **_reference_availability({}, []),
+            }
+
+    def test_more_than_30_slots_raises(self, spark):
+        import pytest
+
+        from ibc_spark.io_.sources import dataframe_from_rows
+        from ibc_spark.ops.reshape import slots_to_availability
+
+        row = {f"Slot {i:02d} (GMT-0600)": "monday" for i in range(31)}
+        with pytest.raises(ValueError, match="31 slot columns"):
+            slots_to_availability(dataframe_from_rows(spark, [row]))
 
 
 class TestProjects:
@@ -101,6 +201,14 @@ class TestProjects:
         reasons = {r["reason"] for r in res.quarantine.collect()}
         assert "Missing required columns: project_name" in reasons
         assert "NetID 'ghost9' for role SM not found in database" in reasons
+
+    def test_quarantine_source_row_has_no_engine_row_id(self, spark):
+        import json
+
+        rows = self._run(spark).quarantine.collect()
+        assert len(rows) == 2  # one missing-name row, one dangling-netid row
+        for r in rows:
+            assert "_row_idx" not in json.loads(r["source_row"]), r["source_row"]
 
     def test_new_project_inserted_with_resolved_roles(self, spark):
         res = self._run(spark)

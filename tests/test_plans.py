@@ -12,9 +12,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ibc_spark.io_.sources import read_table
+from ibc_spark.io_.sources import dataframe_from_rows, read_table
+from ibc_spark.pipelines import staffing_roster
 from ibc_spark.registry import QUERIES
 
+from . import fixtures
 from .conftest import SF_SMOKE
 
 
@@ -530,3 +532,29 @@ def test_bucketed_join_runs_with_zero_join_shuffle(spark):
         assert not m.group(1).startswith(("o_custkey", "c_custkey")), plan
     # exactly one exchange total (the c_mktsegment aggregation)
     assert n_nodes(plan, "Exchange") == 1
+
+
+def test_sheet_rows_plan_to_local_table_scan(spark):
+    """Sheet rows enter as an Arrow-backed local relation, never as a
+    pickled Python RDD that each action re-deserializes in Python workers."""
+    plan = plan_of(dataframe_from_rows(spark, fixtures.roster_rows()))
+    assert n_nodes(plan, "LocalTableScan") == 1, plan
+    assert "ExistingRDD" not in plan, plan
+
+
+def test_roster_availability_is_row_local(spark):
+    """The availability matrix is a projection of each row's own slot
+    cells: no Generate (explode) and no join back on the ingest row id,
+    including inside the cached validation frame."""
+    import re
+
+    res = staffing_roster.run(
+        fixtures.roster_df(spark),
+        fixtures.users_state(spark),
+        fixtures.consultants_state(spark),
+    )
+    plan = plan_of(res.consultants)
+    assert "InMemoryRelation" in plan, plan  # the cached frame is rendered too
+    assert n_nodes(plan, "Generate") == 0, plan
+    join_keys = re.findall(r"^(?:Left|Right) keys \[\d+\]: \[(.*)\]$", plan, flags=re.M)
+    assert join_keys and not any("_row_idx" in k for k in join_keys), plan

@@ -87,6 +87,22 @@ def test_dataframe_from_rows_union_schema(spark):
     assert got == {"x": ("1", None), "y": (None, "3.5")}
 
 
+def test_dataframe_from_rows_typed_schema_and_empty_sheet(spark):
+    import pyarrow as pa
+
+    schema = T.StructType(
+        [T.StructField("n", T.LongType()), T.StructField("s", T.StringType())]
+    )
+    df = dataframe_from_rows(spark, [{"n": 7, "s": 1}, {"s": None}], schema)
+    assert [tuple(r) for r in df.collect()] == [(7, "1"), (None, None)]
+    # typed fields are not coerced: a wrong value fails at ingest
+    with pytest.raises(pa.ArrowInvalid):
+        dataframe_from_rows(spark, [{"n": "seven"}], schema)
+    # an empty sheet is an empty frame (the pipelines' no-op batch)
+    assert dataframe_from_rows(spark, []).isEmpty()
+    assert dataframe_from_rows(spark, [], schema).columns == ["n", "s"]
+
+
 def test_orc_roundtrip_pushdown(spark, tmp_path):
     from ibc_spark.io_.sinks import write_orc
     from ibc_spark.io_.sources import read_orc, read_table
