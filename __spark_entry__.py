@@ -25,16 +25,7 @@ from ibc_spark.registry import ORACLES, QUERIES  # noqa: E402
 
 def _last_green_round() -> dict[str, int]:
     """Map query name → the LATEST round whose CORRECTNESS_r*.json carries a
-    green row for it.
-
-    The driver snapshots only the first 50 entries of ``queries()`` per
-    round, so we rotate. Round 5's rotation (never-checked first, then
-    REGISTRY position) re-attested the same early block every round while
-    the tail went stale (58 entries' last row was r3-); sorting checked
-    entries by last-green round ASCENDING instead drains the stale pool
-    oldest-first, so every entry's attestation is refreshed on a bounded
-    cadence.
-    """
+    green row for it."""
     seen: dict[str, int] = {}
     for path in glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json")):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
@@ -50,112 +41,16 @@ def _last_green_round() -> dict[str, int]:
     return seen
 
 
-# Entries whose SEMANTICS (or candidate/pruning path — the round-5 lesson)
-# changed after their last green driver row — they jump the rotation queue.
-# Clear once the next CORRECTNESS snapshot carries them. Round-8 set
-# (approx_sketch_stats, interval_overlap_sessions, dedup_embedding_lsh)
-# cleared: all three hash-green in CORRECTNESS_r08.json.
-#
-# Round 9: the 8 formerly rows-only probabilistic entries
-# (dedup_minhash_lsh, ann_topk_lsh, ann_topk_ivf, knn_graph_lsh,
-# sketch_{hll,kll,theta}_*, text_compression_ratio) were reshaped to
-# deterministic invariant-attestation surfaces WITH oracles (VERDICT r8
-# #2 option (a)); they have never had a green row, so they re-attest from
-# bucket 1 without needing a force slot.
-# Round-10 force set (q18_large_orders_having, knn_graph_lsh, ann_topk_lsh,
-# ann_topk_ivf, dedup_semdedup, dedup_embedding_cosine,
-# histogram_equidepth_deciles, ann_topk_pq_adc) cleared: all eight
-# hash-green in CORRECTNESS_r10.json.
-#
-# Round 11: derived MECHANICALLY for the first time —
-# tests/test_entry_manifest.py flags any entry whose implementation-
-# closure hash (entry source + oracle + transitive ibc_spark helpers +
-# referenced module files) changed since its last green driver round and
-# is absent here. The r11 audio-path changes (float-PCM decode,
-# anti-aliased FIR resample, vectorized attach/VAD kernels) mostly touch
-# never-green entries (bucket 1, attest new semantics anyway), but the
-# ext/multimodal.py module hash also covers these two green entries; their
-# own code paths are untouched and locally parity-green, yet the
-# conservative round-5 route is to re-attest, not ack — the drain window
-# has spare slots this round.
-#
-# Round 12: the r11 force pair (multimodal_features, multimodal_frame_sample)
-# cleared — both hash-green in CORRECTNESS_r11.json. This round's set is
-# again manifest-derived: the stereo-DSP upgrade (VERDICT r11 #4) edits
-# ext/multimodal.py, whose module hash covers the green r11 audio entries
-# (multimodal_audio_features / _resample / _vad_segments,
-# streaming_audio_features) and the image pair (multimodal_features /
-# _frame_sample, module-hash collateral only — their image kernels are
-# untouched and locally parity-green, but with spare drain slots the
-# conservative round-5 route is to re-attest, not ack, same call as r11).
-#
-# Round 13: the full r12 force set (7 entries) cleared — all hash-green in
-# CORRECTNESS_r12.json, including embedding_power_iteration_pc1 on its
-# rewritten plan. The driver's r12 snapshot (14:30 UTC) postdates commit
-# b2edb92 (12:34 UTC, the suffix _sizes partition-bound change), so the 5
-# suffix green rows attest the CURRENT plan and `entry_manifest refresh`
-# (not force-recheck) was the correct round-open route — decision recorded
-# per VERDICT r12 #1. The set below is manifest-derived (the
-# scripts/round_open.py output after the IMA ADPCM closure): the 0x11
-# decoder branch edits _decode_wav's chunk walk (fact/fmt-extension
-# capture), which is the REAL shared decode path of every green audio
-# entry — re-attest all 8. The image pair (multimodal_features /
-# multimodal_frame_sample) is module-hash collateral only (their kernels
-# never call decode_audio); unlike r11/r12 the drain window has no spare
-# slots (38-entry r8 pool), so they take the documented ack route with a
-# green tests/test_oracle_parity.py instead.
-# ADVICE r12 fixes: embedding_power_iteration_pc1's normalization gained
-# an ss>0 guard (empty corpus → NULL loadings like the oracle, and no
-# ANSI DIVIDE_BY_ZERO) — an output-semantics change on a degenerate input
-# plus a hot-path expression change, so re-attest. The suffix gpos guard
-# change (abs() → two-sided bound in the upfront sizes agg) is
-# error-path-only — identical results on any corpus that passes the
-# guard, locally parity-green — so the 5 suffix entries take the ack
-# route, keeping the drain window at 36 slots.
-#
-# Round 14: the full r13 force set (9 entries) cleared — all hash-green
-# in CORRECTNESS_r13.json (the 8 audio entries on the post-ADPCM
-# _decode_wav chunk walk, pc1 on the empty-corpus guard).
-# scripts/round_open.py reports an EMPTY derived force set at round open:
-# no green entry's implementation closure drifted past its last green
-# driver round, so no force slots are spent this round.
-#
-# Round 15 (optimization round): the set below is every GREEN entry whose
-# actual execution path changed in the r15 optimization pass — the
-# vectorized ADPCM batch kernels + batched audio decode dispatcher
-# (ext/multimodal.py), the scan widening/projection added to the
-# audio/video/binary/image-roundtrip entries, and the audio_features
-# kernel rewrite shared by the streaming twin. All are result-preserving
-# by construction (byte-exact kernel equivalence tests + the full local
-# parity suite re-verified hash-exact), but per the round-5 lesson a
-# changed hot path re-attests under the driver, not just locally. The
-# r15 collateral-only entries (dedup/text families whose module hash
-# moved because ext/dedup.py gained the widen_for_arrow_chain helper;
-# multimodal_audio_rice_codec / multimodal_image_dedup_ahash whose own
-# kernels are untouched) took the documented ack route instead.
-#
-# Round 16 (optimization round 2): the full r15 force set (24 entries)
-# cleared — all hash-green in CORRECTNESS_r15.json. This round's set:
-# multimodal_audio_rice_codec is the one manifest violation inherited
-# from r15 (VERDICT r15 #1 — its FLAC Rice/bit machinery was rewritten
-# in dd30480 and ext/multimodal.py edited post-ack in 545c2e2 without a
-# slot; the post-round CORRECTNESS_r15 snapshot could not cover it since
-# it wasn't in the window), and r16 vectorizes _rice_decode_scalar on
-# the same path anyway (VERDICT r15 #8) — re-attest under the driver.
-# Entries whose execution path r16's optimization pass changes are added
-# alongside as the round progresses:
-# - the 5 suffix/_sa entries: scan widening, the one-pass persisted
-#   corpus frame, gpos-arithmetic coordinates replacing the positions
-#   join, need_adj elision (rank), wider __pid window exchange;
-# - dedup_minhash_lsh / eval_dedup_metrics: hashed-prefix PPJoin arm with
-#   the positional filter + widened/persisted raw-shingle frame.
-# All verified hash-exact against the DuckDB oracle at sf0.01 locally;
-# per the round-5 lesson a changed hot path re-attests under the driver.
-# - the 3 FLAC entries: the Rice residual decode is now the vectorized
-#   binary-lifting kernel (VERDICT r15 #8), byte-exact-fuzzed against
-#   both reference arms but a changed decode hot path nonetheless.
-# - profile_cross_source_overlap / mix_dedup_aware_weights: the shingle
-#   KMV sketch pass is widened (2.4 s → 1.15 s measured, A/B-recorded).
+# Rotation: the driver hash-checks only the first 50 entries of
+# ``queries()`` per round, so the order decides which entries get
+# re-attested. Entries in _FORCE_RECHECK go first: their execution path
+# changed after their last green driver row, and
+# tests/test_entry_manifest.py fails for any such entry (detected by its
+# implementation-closure hash in conf/entry_manifest.json) that is neither
+# listed here nor acked. Never-green entries follow, then green entries
+# oldest-green-round first, so every attestation is refreshed on a
+# bounded cadence. Clear a name once a CORRECTNESS snapshot carries it
+# green; `python scripts/round_open.py` lists the stale ones.
 _FORCE_RECHECK: set[str] = {
     "multimodal_audio_rice_codec",
     "profile_cross_source_overlap",
@@ -173,86 +68,17 @@ _FORCE_RECHECK: set[str] = {
 }
 
 
-# Entries ADDED in the current round, deferred to the NEXT round's snapshot
-# so the 50-entry driver window can spend its slots on the stale
-# re-attestation backlog. They are fully hash-checked by the STRICTER local
-# parity suite every pytest run (tests/test_oracle_parity.py).
-#
-# Round-9 window arithmetic (registry 206 → 207): the 24 round-8
-# deferrals graduate to the never-green bucket, joined there by the 8
-# reshaped invariant-attestation entries (formerly rows-only; see
-# _FORCE_RECHECK note) = 32 never-green slots + 1 force-recheck,
-# leaving 17 for the oldest-green drain (the r4/r5 pool). The one
-# round-9 addition is deferred below so it cannot eat those slots.
-# Round-10 window arithmetic (registry 208 → 217): the 2 round-9
-# deferrals (eval_dedup_metrics, curriculum_quality_order) graduate to
-# the never-green bucket; 8 force-recheck slots (q18 + 7 r10 plan
-# changes); the remaining 40 slots drain exactly the r5 pool (40
-# entries). This round's 9 additions are deferred below so they cannot
-# eat those slots (next round: 9 graduations + 41 drain slots reach the
-# r6 pool).
-# Round-11 window arithmetic: the 9 round-10 deferrals graduate to the
-# never-green bucket (audio family now carrying the r11 DSP upgrades:
-# float-PCM decode + anti-aliased FIR resample — attested first with the
-# new semantics); 0 force-recheck; the remaining 41 slots drain the whole
-# r6 pool (35 entries) + the 6 oldest r7 entries. Round-11 additions are
-# deferred below.
-# Round-12 window arithmetic: the 9 round-11 deferrals (5 suffix-array +
-# 4 audio entries — the ONLY registry entries without a driver
-# CORRECTNESS row) graduate to the never-green bucket and attest first;
-# 7 force-recheck slots (stereo-DSP closure changes, the image pair's
-# module-hash collateral, and the pc1 perf rewrite — see _FORCE_RECHECK);
-# the remaining 34 slots drain the whole r7 pool (32 entries) + the 2
-# oldest r8 entries. Round-12 additions are deferred below.
-# Round-13 window arithmetic: the 6 round-12 deferrals (4 stereo-DSP +
-# pcm8/pcm24 — the only never-green entries) graduate to the never-green
-# bucket and attest first; 9 force-recheck slots (the green audio family,
-# whose shared _decode_wav path gained the ADPCM branch, plus the pc1
-# empty-corpus guard — see _FORCE_RECHECK); the remaining 35 slots drain
-# 35 of the 38-entry r8 pool (incl. weekday_bitstring and
-# pivot_status_counts); the 3 youngest r8 entries carry to r14.
-# Round-13 additions are deferred below.
-# Round-14 window arithmetic: the 7 round-13 deferrals (ADPCM
-# mono/stereo, G.711 mu-law/A-law, AVI video frames/scene-cuts/
-# frame-dedup — the only never-green entries) graduate to the
-# never-green bucket and attest first; 0 force-recheck (empty derived
-# set at round open); the remaining 43 slots drain the 3 r8 carryovers
-# (q21_waiting_suppliers, graph_pagerank_shuffled,
-# streaming_decontaminate_bloom) + the 40 oldest entries of the
-# 44-entry r9 pool. Round-14 additions are deferred below.
-# Round-15 window arithmetic (optimization round, no new entries): the 10
-# r14 media deferrals graduate to the never-green bucket and attest
-# first (10 slots); 24 force-recheck slots (the r15 optimization pass's
-# changed-path green entries — see _FORCE_RECHECK); the remaining 16
-# slots drain the 4 r9 carryovers (bucketed_join_colocate,
-# sample_diverse_per_cluster, streaming_dedup_watermarked,
-# streaming_sketch_kmv) + the 12 oldest r10-pool entries.
-# Staleness bound (VERDICT r14 #5): with the registry frozen at 249 and
-# ~40+ slots/round net of force sets, no green row's attestation can age
-# past 5 rounds; this round's oldest post-snapshot row will be r10 (5
-# rounds), shrinking again next round when the force pressure is gone.
-# Round-16 window arithmetic (optimization round, no new entries): 13
-# force-recheck slots (the r16 optimization pass's changed-path entries
-# — 5 suffix, 2 dedup PPJoin consumers, 2 KMV sketch consumers, 4
-# FLAC/Rice decode entries); no never-green entries remain, so the
-# other 37 slots drain the oldest-green pool (r10/r11 rows), keeping
-# the staleness bound shrinking.
-_DEFER_TO_NEXT_ROUND: set[str] = set()
-
-
 def _ordered(mapping: dict) -> dict:
     green = _last_green_round()
     pos = {k: i for i, k in enumerate(mapping)}
 
     def sort_key(k: str):
         if k in _FORCE_RECHECK:
-            bucket = 0  # semantics changed / sibling pairing — attest first
-        elif k in _DEFER_TO_NEXT_ROUND:
-            bucket = 3  # new this round, parity-proven locally — next round
+            bucket = 0
         elif k not in green:
-            bucket = 1  # rows-only family (never acquires a green row) + new
+            bucket = 1
         else:
-            bucket = 2  # previously green: drain oldest-first
+            bucket = 2
         return (bucket, green.get(k, 0), pos[k])
 
     keys = sorted(mapping, key=sort_key)
@@ -268,8 +94,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
     Ordered for the driver's 50-entry snapshot window (see ``_ordered``:
-    force-recheck, then never-green, then oldest-green-first, with this
-    round's additions deferred to the next snapshot).
+    force-recheck, then never-green, then oldest-green-first).
     """
     return _ordered(QUERIES)
 

@@ -4,218 +4,93 @@
 Prints TWO JSON lines to stdout: first the full per-query map (the
 permanent record), then a compact summary line (total + the top-10
 slowest queries + query count, <1.5 KB) — the compact line goes LAST
-because the driver captures only the tail of the output, and a 93-query
-map overflows that window, truncating the JSON mid-line and leaving the
-driver's ``parsed`` null.
+because the driver captures only the tail of the output, and a full
+per-query map overflows that window.
 
-Each query runs $BENCH_RUNS times (default 3) and reports the MEDIAN —
-one warm run per query cannot separate plan regressions from JVM/GC
-noise (~20 untouched queries swung >30% between rounds 1 and 2).
-Queries are forced end-to-end with the `noop` write format (full
-computation of every output column, no driver-side result transfer),
-after a JVM/session warmup pass on the smallest table.
+Each query runs $BENCH_RUNS times (default 3) and reports the MEDIAN of
+cold runs (``ibc_spark.tools.timing.cold_samples``: noop write, then
+every persist, checkpoint block and the catalog cache released). Entries
+whose median exceeds SLOW_THRESHOLD_SEC are topped up to SLOW_RUNS runs.
+$BENCH_NAMES (comma-separated) restricts the pass to a subset. Each
+entry's stderr line gives its change against the newest committed full
+record in bench_records/.
 """
 
 from __future__ import annotations
 
+import functools
+import glob
 import json
 import os
+import re
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Headline set: the analytical queries + the heaviest operator families.
-# Trivial scalar demos are included too — they cost ~0 and keep per-round
-# coverage visible in BENCH history.
-HEADLINE: list[str] | None = None  # None → all registry queries
-
-
-def materialize(df) -> int:
-    df.write.format("noop").mode("overwrite").save()
-    return 0
+# Rebuild the session every N queries: accumulated session state (python
+# daemon heaps, executor-side caches) inflated mid-run medians up to 2.7x
+# for the pandas-UDF-heavy dedup family; a stop+rebuild costs ~1.3 s.
+RESTART_EVERY = 25
+# A single 3-run median on a shared host swung multi-second entries up
+# to 5.5x between passes, so entries above the threshold get extra runs.
+SLOW_THRESHOLD_SEC = 3.0
+SLOW_RUNS = 5
 
 
 def prior_bench() -> dict[str, float]:
-    """Per-query timings from the newest BENCH_r*.json next to this script,
-    overlaid on the newest committed full per-query record in
-    bench_records/ (the driver snapshot keeps only the top-10 compact
-    line, which would misclassify ~220 entries as "new" for the anchor
-    comparison); {} when this is the first round."""
-    import glob
-    import re
-
+    """Per-query medians of the newest bench_records/bench_r*_full_*.json;
+    {} when there is none."""
     here = os.path.dirname(os.path.abspath(__file__))
-
-    def load_queries(path: str) -> dict[str, float]:
-        try:
-            with open(path) as f:
-                doc = json.load(f)
-            queries = doc.get("queries")
-            if queries is None and isinstance(doc.get("parsed"), dict):
-                queries = doc["parsed"].get("queries")
-            if queries is None and isinstance(doc.get("tail"), str):
-                # driver snapshots keep only the raw output tail: parse the
-                # final JSON line (the bench's own summary) and take its
-                # queries/top10 object, so the compact summary's meta float
-                # keys (anchor_ratio, sum_median_sec, ...) never leak into
-                # the baseline dict as pseudo-queries (ADVICE r13).
-                queries = {}
-                for line in reversed(doc["tail"].strip().splitlines()):
-                    try:
-                        parsed = json.loads(line)
-                    except ValueError:
-                        continue
-                    if isinstance(parsed, dict):
-                        obj = parsed.get("queries") or parsed.get("top10") or {}
-                        if isinstance(obj, dict):
-                            queries = obj
-                        break
-            return {k: float(v) for k, v in (queries or {}).items()}
-        except (OSError, ValueError, TypeError):
-            return {}
-
-    merged: dict[str, float] = {}
     fulls = []
     for path in glob.glob(os.path.join(here, "bench_records", "bench_r*_full_*.json")):
         m = re.search(r"bench_r(\d+)_full_", path)
         if m:
             fulls.append((int(m.group(1)), path))
-    if fulls:
-        merged.update(load_queries(max(fulls)[1]))
-    rounds = []
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if m:
-            rounds.append((int(m.group(1)), path))
-    if rounds:
-        merged.update(load_queries(max(rounds)[1]))
-    return merged
-
-
-def _time_entry(spark, name: str, sf_dir: str, runs: int, slow_threshold: float, slow_runs: int) -> list[float]:
-    """Cold-timed samples for one entry: ``runs`` runs, topped up to
-    ``slow_runs`` when the median lands above ``slow_threshold`` (the
-    VERDICT r12 #4 noise hardening); persisted frames, checkpoint blocks,
-    and the catalog cache are released after every run so each sample is
-    a true cold timing. Returns the sorted samples."""
-    from ibc_spark.ext.persistreg import release_checkpoints, release_persisted
-    from ibc_spark.registry import QUERIES
-
-    samples: list[float] = []
-
-    def one_run() -> None:
-        t0 = time.perf_counter()
-        materialize(QUERIES[name](spark, sf_dir))
-        samples.append(time.perf_counter() - t0)
-        release_persisted()
-        release_checkpoints(spark)
-        spark.catalog.clearCache()
-
-    for _ in range(runs):
-        one_run()
-    if sorted(samples)[len(samples) // 2] > slow_threshold:
-        while len(samples) < slow_runs:
-            one_run()
-    samples.sort()
-    return samples
-
-
-# Idle-anchor comparison (VERDICT r12 #4): the repo's best idle-host
-# per-query anchor is 0.768 s/q (the round-8 low-load full-registry
-# record). Comparable set = everything except the algorithmically-heavy
-# exact-suffix-array family (a documented corpus-global sort, ~9s/entry
-# by design) and entries with no prior-round timing (new this round) —
-# the same convention the r12 adjudication applied by hand. A ratio
-# near 1.0 at normal load means no regression; a broad ratio spike with
-# high `load` means co-tenant noise, not code.
-ANCHOR_SEC_PER_QUERY = 0.768
-HEAVY = {
-    "suffix_array_rank",
-    "suffix_lrs",
-    "suffix_lcp_histogram",
-    "dedup_duplicate_spans_sa",
-    "dedup_spans_rewrite_sa",
-}
-
-
-def _anchor_block(timings: dict[str, float], previous: dict[str, float]) -> dict:
-    comparable = {
-        k: v for k, v in timings.items() if v > 0 and k not in HEAVY and k in previous
-    }
-    return {
-        "anchor_sec_per_query": ANCHOR_SEC_PER_QUERY,
-        "comparable_n": len(comparable),
-        "comparable_sec_per_query": (
-            round(sum(comparable.values()) / len(comparable), 4) if comparable else None
-        ),
-        "anchor_ratio": (
-            round(sum(comparable.values()) / len(comparable) / ANCHOR_SEC_PER_QUERY, 3)
-            if comparable
-            else None
-        ),
-        "excluded_heavy": sorted(HEAVY & set(timings)),
-        "excluded_new": sorted(k for k in timings if k not in previous),
-    }
+    if not fulls:
+        return {}
+    try:
+        with open(max(fulls)[1]) as f:
+            return {k: float(v) for k, v in json.load(f)["queries"].items()}
+    except (OSError, ValueError, KeyError, TypeError):
+        return {}
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from ibc_spark.registry import QUERIES
-    from ibc_spark.session import get_spark
+    from ibc_spark.tools.timing import cold_samples, median, warm_session
 
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # progress bars are disabled in get_spark (static conf) so stdout stays
-    # a single parseable JSON line.
-    spark = get_spark("ibc_spark_bench")
+    # parseable JSON.
+    spark = warm_session("ibc_spark_bench", sf_dir)
     previous = prior_bench()
 
-    # Warmup: spin executors + codegen on a tiny scan.
-    from ibc_spark.io_.sources import read_table
-
-    read_table(spark, sf_dir, "nation").count()
-
-    names = HEADLINE or sorted(QUERIES)
-    only = os.environ.get("BENCH_NAMES")  # comma-separated subset, for local iteration
+    names = sorted(QUERIES)
+    only = os.environ.get("BENCH_NAMES")
     if only:
         wanted = {n.strip() for n in only.split(",") if n.strip()}
         names = [n for n in names if n in wanted]
     runs = max(1, int(os.environ.get("BENCH_RUNS", "3")))
-    # Rebuild the session every N queries: measured on the 159-query run,
-    # accumulated session state (python daemon heaps, executor-side caches)
-    # inflated mid-run medians up to 2.7x over a fresh session for the
-    # pandas-UDF-heavy dedup family (4.48s vs 1.66s for
-    # dedup_embedding_cosine, uncontended host; System.gc() alone only
-    # recovered ~60%). A stop+rebuild costs ~1.3s and restores fresh-JVM
-    # timings, so each query's median measures the QUERY, not the session
-    # history before it. Still cold-cache per run (release + clearCache).
-    restart_every = max(1, int(os.environ.get("BENCH_RESTART_EVERY", "25")))
-    # Co-tenant-noise hardening (VERDICT r12 #4): a single 3-run median on a
-    # shared host swung untouched multi-second entries up to 5.5x between
-    # rounds. For entries whose 3-run median exceeds this threshold, take
-    # extra runs (5 total by default) — ~+90s over the full registry at the
-    # current mix — and record per-entry run counts so the official BENCH
-    # history carries its own noise budget.
-    slow_threshold = float(os.environ.get("BENCH_SLOW_THRESHOLD_SEC", "3.0"))
-    slow_runs = max(runs, int(os.environ.get("BENCH_SLOW_RUNS", "5")))
     timings: dict[str, float] = {}
     run_counts: dict[str, int] = {}
-    entry_load: dict[str, float] = {}  # 1-min load when the entry was timed
     t_all = time.perf_counter()
 
     for qi, name in enumerate(names):
-        if qi and qi % restart_every == 0:
+        if qi and qi % RESTART_EVERY == 0:
             spark.stop()
-            spark = get_spark("ibc_spark_bench")
-            read_table(spark, sf_dir, "nation").count()
+            spark = warm_session("ibc_spark_bench", sf_dir)
         try:
-            samples = _time_entry(spark, name, sf_dir, runs, slow_threshold, slow_runs)
+            build = functools.partial(QUERIES[name], spark, sf_dir)
+            samples = cold_samples(spark, build, runs)
+            if median(samples) > SLOW_THRESHOLD_SEC:
+                samples = sorted(samples + cold_samples(spark, build, SLOW_RUNS - runs))
             run_counts[name] = len(samples)
-            entry_load[name] = round(os.getloadavg()[0], 2)
-            timings[name] = round(samples[len(samples) // 2], 4)
+            timings[name] = round(median(samples), 4)
             delta = ""
-            if name in previous and previous[name] > 0:
+            if previous.get(name, 0) > 0:
                 pct = 100.0 * (timings[name] - previous[name]) / previous[name]
-                delta = f" ({pct:+.0f}% vs prior round {previous[name]:.2f}s)"
+                delta = f" ({pct:+.0f}% vs prior record {previous[name]:.2f}s)"
             print(
                 f"BENCH {name}: {timings[name]:.2f}s median of {len(samples)}{delta}",
                 file=sys.stderr,
@@ -223,111 +98,12 @@ def main() -> None:
         except Exception as exc:  # a failing query must not hide the others
             timings[name] = -1.0
             print(f"BENCH ERROR {name}: {exc}", file=sys.stderr)
-    anchor = _anchor_block(timings, previous)
-
-    # Self-healing contended-run splice (VERDICT r13 #3): rounds 12 and 13
-    # each produced a full pass whose anchor_ratio flagged co-tenant load
-    # (1.315 / 1.134) and the discard/re-run adjudication was MANUAL both
-    # times. Automate it: when the final anchor exceeds the trigger,
-    # re-time the entries whose median blew up vs their prior-round
-    # baseline (the contended block, mechanically: ratio > 2x) on a fresh
-    # session at end-of-pass, keep the better median, and record BOTH
-    # numbers in a `reruns` block so the official record self-documents
-    # the splice instead of needing a hand-written adjudication note.
-    rerun_trigger = float(os.environ.get("BENCH_RERUN_ANCHOR", "1.15"))
-    rerun_ratio = float(os.environ.get("BENCH_RERUN_RATIO", "2.0"))
-    # proportional arm (VERDICT r14 #4): after the >2x outlier splice, a
-    # still-inflated anchor means UNIFORM ambient load, which the outlier
-    # trigger can't see. Re-run the inflated comparable entries (ratio vs
-    # the prior round above this softer bound), largest excess first.
-    prop_ratio = float(os.environ.get("BENCH_RERUN_PROP_RATIO", "1.15"))
-    prop_max = int(os.environ.get("BENCH_RERUN_PROP_MAX", "60"))
-    reruns: dict[str, dict] = {}
-
-    def _splice(suspects: list[str], label: str) -> None:
-        nonlocal spark
-        print(
-            f"BENCH anchor_ratio {anchor_now()} > {rerun_trigger}: "
-            f"re-running {len(suspects)} {label} entries",
-            file=sys.stderr,
-        )
-        spark.stop()
-        spark = get_spark("ibc_spark_bench")
-        read_table(spark, sf_dir, "nation").count()
-        for ri, name in enumerate(suspects):
-            if ri and ri % restart_every == 0:
-                spark.stop()
-                spark = get_spark("ibc_spark_bench")
-                read_table(spark, sf_dir, "nation").count()
-            try:
-                samples = _time_entry(
-                    spark, name, sf_dir, runs, slow_threshold, slow_runs
-                )
-                new_med = round(samples[len(samples) // 2], 4)
-            except Exception as exc:  # keep the first-pass number
-                print(f"BENCH RERUN ERROR {name}: {exc}", file=sys.stderr)
-                continue
-            rerun_load = round(os.getloadavg()[0], 2)
-            first_load = entry_load.get(name)
-            # VERDICT r15 #5: the residual min() arm biased downward when
-            # the rerun was itself contended. Load-gated keep only: trust
-            # the re-timed value iff it ran under load no worse than the
-            # first pass, otherwise keep the first pass unchanged (both
-            # numbers stay in the record either way).
-            if first_load is None or rerun_load <= first_load:
-                kept = new_med
-            else:
-                kept = timings[name]
-            reruns[name] = {
-                "first_pass": timings[name],
-                "first_load": first_load,
-                "rerun": new_med,
-                "rerun_load": rerun_load,
-                "kept": kept,
-            }
-            print(
-                f"BENCH RERUN {name}: {timings[name]:.2f}s -> {new_med:.2f}s "
-                f"(kept {kept:.2f}s; load {first_load}->{rerun_load})",
-                file=sys.stderr,
-            )
-            timings[name] = kept
-            run_counts[name] = run_counts.get(name, 0) + len(samples)
-
-    def anchor_now():
-        return _anchor_block(timings, previous)["anchor_ratio"]
-
-    if anchor["anchor_ratio"] is not None and anchor["anchor_ratio"] > rerun_trigger:
-        suspects = sorted(
-            k
-            for k, v in timings.items()
-            if v > 0 and previous.get(k, 0) > 0.05 and v / previous[k] > rerun_ratio
-        )
-        if suspects:
-            _splice(suspects, "contended (>2x outlier)")
-            anchor = _anchor_block(timings, previous)
-        # second, proportional arm: still inflated → re-time the largest
-        # inflated contributors once, oldest-trigger semantics unchanged
-        if anchor["anchor_ratio"] is not None and anchor["anchor_ratio"] > rerun_trigger:
-            inflated = [
-                (timings[k] - previous[k], k)
-                for k, v in timings.items()
-                if v > 0
-                and previous.get(k, 0) > 0.05
-                and k not in reruns
-                and v / previous[k] > prop_ratio
-            ]
-            inflated.sort(reverse=True)
-            suspects = [k for _excess, k in inflated[:prop_max]]
-            if suspects:
-                _splice(suspects, "ambient-inflated (proportional arm)")
-                anchor = _anchor_block(timings, previous)
 
     total = round(time.perf_counter() - t_all, 4)
-    # Host load (1/5/15-min averages) stamped into both JSON lines so
-    # round-over-round deltas are mechanically adjudicable against co-tenant
-    # noise (round 6's closing numbers needed a prose disclaimer; VERDICT
-    # r6 #6). Taken AFTER the run: the 15-min average covers most of it.
+    # Host load (1/5/15-min averages), taken after the run so the 15-min
+    # average covers most of it: deltas between passes are read against it.
     load = [round(x, 2) for x in os.getloadavg()]
+    methodology = f"cold+session-refresh/{RESTART_EVERY}"
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
@@ -342,18 +118,9 @@ def main() -> None:
                 "queries": timings,
                 "sf": sf_val,
                 "runs_per_query": runs,
-                # medians are COLD since round 5: tracked persists are
-                # released (blocking) + catalog cache cleared between runs.
-                # Rounds 1-4 were partially warm for the cache-heavy dedup
-                # family — flag the methodology so round-over-round deltas
-                # stay interpretable.
-                "methodology": f"cold+session-refresh/{restart_every}",
+                "methodology": methodology,
                 "load": load,
                 "run_counts": run_counts,
-                "anchor": anchor,
-                # contended-entry splices this pass (empty when the anchor
-                # stayed under the trigger): name -> first_pass/rerun/kept
-                "reruns": reruns,
             }
         ),
         flush=True,
@@ -371,21 +138,11 @@ def main() -> None:
                 "sf": sf_val,
                 "n_queries": len(timings),
                 "runs_per_query": runs,
-                "extra_runs_over_sec": slow_threshold,
+                "extra_runs_over_sec": SLOW_THRESHOLD_SEC,
                 "n_extra_run_entries": sum(1 for c in run_counts.values() if c > runs),
-                "methodology": f"cold+session-refresh/{restart_every}",
+                "methodology": methodology,
                 "load": load,
                 "sum_median_sec": round(sum(t for t in timings.values() if t > 0), 2),
-                "n_reruns": len(reruns),
-                "anchor": {
-                    k: anchor[k]
-                    for k in (
-                        "anchor_sec_per_query",
-                        "comparable_n",
-                        "comparable_sec_per_query",
-                        "anchor_ratio",
-                    )
-                },
             }
         ),
         flush=True,

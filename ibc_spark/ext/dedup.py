@@ -142,25 +142,6 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.size(F.array_intersect(a, b)).cast("double") / F.size(F.array_union(a, b))
 
 
-def passage_windows(toks: Column, *, window: int, stride: int) -> Column:
-    """Array of ``(start_tok, passage)`` structs: FULL ``window``-token
-    passages starting at 1-based positions 1, 1+stride, 2·stride+1, …
-    (docs shorter than ``window`` yield an empty array).
-
-    Same construction discipline as :func:`shingles`: the windows come from
-    ``window`` shifted slices merged with ``zip_with`` — the token array is
-    only ever a function ARGUMENT, never re-evaluated inside a lambda body
-    (the collapsed-in recompute is ~40× slower on real docs)."""
-    m = F.greatest(F.size(toks) - window + 1, F.lit(0))  # count of full windows
-    out = F.slice(toks, window, m)  # rightmost token of each window
-    for off in range(window - 2, -1, -1):
-        out = F.zip_with(F.slice(toks, off + 1, m), out, lambda a, b: F.concat_ws(" ", a, b))
-    structs = F.transform(
-        out, lambda p, i: F.struct((i + 1).alias("start_tok"), p.alias("passage"))
-    )
-    return F.filter(structs, lambda s: (s["start_tok"] - 1) % stride == 0)
-
-
 def _window_passages(window: int, stride: int):
     """Arrow-batched (start_tok, passage) window kernel over pre-tokenized
     arrays, shared by :func:`passage_exact_dups` (stride 5) and
@@ -1092,19 +1073,6 @@ def _minhash_rows_np(k: int):
         return pd.Series(out)
 
     return _sig
-
-
-def minhash_signatures(
-    df: DataFrame, *, id_col: str, text_col: str, k: int = 32, n: int = 3
-) -> DataFrame:
-    """(id, signature array<long>[k]) — narrow map, no shuffle."""
-    return (
-        df.select(
-            F.col(id_col).alias("doc_id"),
-            _hash_shingles(shingles(tokens(F.col(text_col)), n)).alias("hsh"),
-        )
-        .select("doc_id", _minhash_rows_np(k)(F.col("hsh")).alias("sig"))
-    )
 
 
 def _shingle_frame(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:

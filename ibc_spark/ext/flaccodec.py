@@ -263,28 +263,13 @@ def _rice_encode(bw: _BW, residuals, param: int) -> None:
     bw.write(int.from_bytes(packed.tobytes(), "big") >> pad, total)
 
 
-def _rice_decode_scalar(br: _BR, n: int, param: int) -> list[int]:
-    out = [0] * n
-    ru = br.read_unary
-    rd = br.read
-    if param:
-        for i in range(n):
-            u = (ru() << param) | rd(param)
-            out[i] = -(u + 1) >> 1 if u & 1 else u >> 1
-    else:
-        for i in range(n):
-            u = ru()
-            out[i] = -(u + 1) >> 1 if u & 1 else u >> 1
-    return out
-
-
 def _rice_decode_bigint(br: _BR, n: int, param: int) -> list[int]:
     """Rice decode of ``n`` codes ([q zeros][1][param bits]) with the
     reader state held in locals — the per-code cost is a handful of
     bigint ops (leading-zero count via ``int.bit_length``), no method
-    calls. Bit-exact with :func:`_rice_decode_scalar`; kept as the
-    second reference arm for the vectorized :func:`_rice_decode`
-    (~700 ns/code, the r15 shape)."""
+    calls (~700 ns/code). The reference arm the tests pin the
+    vectorized :func:`_rice_decode` against, and its dispatch below
+    128 codes."""
     out = [0] * n
     d = br.d
     dlen = len(d)
@@ -349,13 +334,13 @@ def _rice_decode(br: _BR, n: int, param: int) -> list[int]:
     commute, so application order is free). Quotients are diffs of stop
     positions, remainders one fancy-indexed (n, param) gather — ~20×
     faster than the bigint walk at typical block sizes, bit-exact with
-    both reference arms (:func:`_rice_decode_scalar`,
-    :func:`_rice_decode_bigint`; pinned by the round-trip tests).
+    the reference arm :func:`_rice_decode_bigint` (pinned by the
+    round-trip tests).
 
     The window starts at n·(param+1) + 512 bits (the no-quotient length
     plus slack) and doubles while unresolved — pathological quotient runs
     converge in O(log total) retries; a window at stream end that still
-    cannot resolve is a truncated stream, same error as the scalar arm."""
+    cannot resolve is a truncated stream, same error as the bigint arm."""
     if n == 0:
         return []
     if n < 128:

@@ -12,7 +12,7 @@ builder memory. This module makes it mechanical:
   and the driver round that hash was last attested green in.
 - ``tests/test_entry_manifest.py`` recomputes the hash every pytest run;
   an entry whose hash differs from the recorded one after a green round
-  must be in ``_FORCE_RECHECK`` / ``_DEFER_TO_NEXT_ROUND`` or the test
+  must be in ``_FORCE_RECHECK`` or the test
   fails, naming the entry and the two legitimate ways out.
 
 The closure hash intentionally over-approximates: editing a shared module
@@ -28,9 +28,10 @@ CLI:
   python -m ibc_spark.tools.entry_manifest refresh   # after a new
       CORRECTNESS_r{N}.json lands: re-record hashes for entries whose
       last green round advanced (their attested code IS the current code)
-  python -m ibc_spark.tools.entry_manifest ack NAME [NAME...]  # builder
-      attests a flagged entry's edit is semantics-preserving AND locally
-      parity-green; re-records its hash at the existing green round
+  python -m ibc_spark.tools.entry_manifest ack NAME [NAME...]  # attest
+      that a flagged entry's edit is semantics-preserving AND locally
+      parity-green; re-records the hash of exactly the named entries, at
+      their existing green round
   python -m ibc_spark.tools.entry_manifest check     # what the test runs
 """
 
@@ -157,7 +158,7 @@ def check() -> list[str]:
 
     sys.path.insert(0, _REPO)
     entry_mod = __import__("__spark_entry__")
-    excused = entry_mod._FORCE_RECHECK | entry_mod._DEFER_TO_NEXT_ROUND
+    excused = entry_mod._FORCE_RECHECK
     manifest = load_manifest()
     entries = manifest.get("entries", {})
     green = _last_green_rounds()
@@ -184,11 +185,10 @@ def check() -> list[str]:
     return problems
 
 
-def refresh(ack_names: set[str] | None = None) -> dict[str, str]:
-    """Re-record hashes. Without ``ack_names``: only entries whose last
-    green round advanced past the recorded one (the driver attested the
-    current code) or that are new/never-green. With ``ack_names``: also
-    those, at their existing green round."""
+def refresh() -> dict[str, str]:
+    """Re-record hashes of entries whose last green round advanced past
+    the recorded one (the driver attested the current code) or that are
+    new/never-green; drop entries no longer registered."""
     from ibc_spark.registry import QUERIES
 
     manifest = load_manifest()
@@ -209,15 +209,29 @@ def refresh(ack_names: set[str] | None = None) -> dict[str, str]:
             if rec["hash"] != new_hash:
                 entries[name] = {"hash": new_hash, "green_round": 0}
                 changed[name] = "never-green update"
-        elif ack_names and name in ack_names:
-            entries[name] = {"hash": new_hash, "green_round": rec["green_round"]}
-            changed[name] = "acked"
     for name in list(entries):
         if name not in QUERIES:
             del entries[name]
             changed[name] = "removed"
     save_manifest(manifest)
     return changed
+
+
+def ack(names: list[str]) -> dict[str, str]:
+    """Re-record the current hash of exactly ``names``, each at its
+    recorded green round; every other row stays as it is."""
+    from ibc_spark.registry import QUERIES
+
+    unknown = sorted(set(names) - set(QUERIES))
+    if unknown:
+        raise KeyError(f"not registry entries: {unknown}")
+    manifest = load_manifest()
+    entries = manifest.setdefault("entries", {})
+    for name in names:
+        g = entries.get(name, {}).get("green_round", 0)
+        entries[name] = {"hash": compute_entry_hash(name), "green_round": g}
+    save_manifest(manifest)
+    return {name: "acked" for name in names}
 
 
 def main(argv: list[str]) -> int:
@@ -234,7 +248,7 @@ def main(argv: list[str]) -> int:
             print(f"{why:>20}  {name}")
         return 0
     if cmd == "ack":
-        for name, why in sorted(refresh(ack_names=set(argv[1:])).items()):
+        for name, why in sorted(ack(argv[1:]).items()):
             print(f"{why:>20}  {name}")
         return 0
     print(__doc__)

@@ -12,23 +12,19 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from ibc_spark.ext.persistreg import release_checkpoints, release_persisted  # noqa: E402
-from ibc_spark.io_.sources import read_table  # noqa: E402
 from ibc_spark.registry import QUERIES  # noqa: E402
-from ibc_spark.session import get_spark  # noqa: E402
+from ibc_spark.tools.timing import cold_samples, warm_session  # noqa: E402
 
 
 def main() -> None:
     names = [n.strip() for n in sys.argv[1].split(",") if n.strip()]
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 1
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("ibc_spark_profile")
+    spark = warm_session("ibc_spark_profile", sf_dir)
     sc = spark.sparkContext
-    read_table(spark, sf_dir, "nation").count()  # warm
     store = sc._jsc.sc().statusStore()
 
     def jobs_snapshot():
@@ -81,15 +77,8 @@ def main() -> None:
         for r in range(runs):
             before = set(jobs_snapshot())
             sc.setJobDescription(f"profile:{name}")
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            wall = time.perf_counter() - t0
+            [wall] = cold_samples(spark, lambda: QUERIES[name](spark, sf_dir), 1)
             sc.setJobDescription(None)
-            release_persisted()
-            release_checkpoints(spark)
-            spark.catalog.clearCache()
             after = jobs_snapshot()
             new = {jid: v for jid, v in after.items() if jid not in before}
             tot_job = sum(v[1] or 0 for v in new.values())

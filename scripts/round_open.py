@@ -47,7 +47,7 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from ibc_spark.registry import QUERIES
 
-    # The RAW drift set (ignoring the _FORCE_RECHECK/_DEFER excuse list
+    # The RAW drift set (ignoring the _FORCE_RECHECK excuse list
     # check() applies): every entry whose closure hash differs from the
     # one pinned at its last green driver round. Entries already in
     # _FORCE_RECHECK are listed as covered, not as violations.
@@ -82,22 +82,6 @@ def main() -> int:
     print("\n== step 3: guard ==")
     if problems:
         print("VIOLATIONS — resolve before building (see step 2).")
-        return 1
-    # Sanity: the defer set must only contain registry entries with no
-    # green row (additions are deferred exactly one round).
-    from ibc_spark.registry import QUERIES
-
-    greens = entry_manifest._last_green_rounds()
-    bad = sorted(
-        n
-        for n in entry_mod._DEFER_TO_NEXT_ROUND
-        if n in QUERIES and greens.get(n, 0) > 0
-    )
-    if bad:
-        print("stale _DEFER_TO_NEXT_ROUND entries (already driver-green) —")
-        print("graduate them out of the defer set:")
-        for name in bad:
-            print(f"  {name}")
         return 1
     print("CLEAN — manifest refreshed, pytest freshness guard will pass.")
     return 0

@@ -4,14 +4,16 @@ the empirical point beyond sf0.1).
 
 Runs each entry at sf0.01 / sf0.1 / sf1 (sf1 from ``gen_scale_sf.py``,
 10x sf0.1 with similarity-preserving per-replica transforms) under the
-bench harness discipline (noop materialize, release_persisted +
-clearCache between runs, median of BENCH_RUNS), then fits the per-decade
+bench's cold timing (``ibc_spark.tools.timing``, median of BENCH_RUNS),
+then fits the per-decade
 scaling exponent  e = log10(t_sf1 / t_sf0.1).  e <= ~1 is linear; the
 0.01 -> 0.1 decade is reported too but is dominated by fixed overhead at
 these sizes (sub-second queries), so the 0.1 -> 1 decade is the signal.
 
 Run: ``python scripts/scale_sweep.py [entry ...]`` -> JSON on stdout,
-progress on stderr.
+progress on stderr. With ``BENCH_RUNS=1`` and every registry name on argv
+it is the full-registry triage scan (sf0.1 vs sf1 per entry); an entry
+that fails is recorded as -1.0 and the sweep goes on.
 
 STREAMING CAVEAT (r10): sweep streaming entries with ONE SF per process
 (IBC_SWEEP_SFS=sf10 ...). The per-SF session restart (spark.stop() + new
@@ -23,11 +25,11 @@ streaming catch-up batch in the third session then crawls on ~2 cores
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
 import sys
-import time
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
@@ -76,10 +78,8 @@ SFS = [
 def main() -> None:
     names = sys.argv[1:] or ENTRIES
     runs = max(1, int(os.environ.get("BENCH_RUNS", "3")))
-    from ibc_spark.ext.persistreg import release_checkpoints, release_persisted
-    from ibc_spark.io_.sources import read_table
     from ibc_spark.registry import QUERIES
-    from ibc_spark.session import get_spark
+    from ibc_spark.tools.timing import cold_samples, median, warm_session
 
     results: dict[str, dict[str, float]] = {n: {} for n in names}
     for sf_name, sf_dir in SFS:
@@ -87,41 +87,30 @@ def main() -> None:
             print(f"skip {sf_name}: {sf_dir} missing", file=sys.stderr)
             continue
         # fresh session per SF: no cross-SF cache/heap contamination
-        spark = get_spark(f"scale_sweep_{sf_name}")
-        read_table(spark, sf_dir, "nation").count()
+        spark = warm_session(f"scale_sweep_{sf_name}", sf_dir)
         for name in names:
-            samples = []
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                samples.append(time.perf_counter() - t0)
-                release_persisted()
-                # free local-checkpoint blocks too (suffix rounds):
-                # invisible to DataFrame unpersist, they OOMed the
-                # 8g heap by the third back-to-back sf3 entry (r12)
-                release_checkpoints(spark)
-                spark.catalog.clearCache()
-            samples.sort()
-            med = samples[len(samples) // 2]
+            try:
+                build = functools.partial(QUERIES[name], spark, sf_dir)
+                med = median(cold_samples(spark, build, runs))
+                print(f"{sf_name} {name}: {med:.2f}s", file=sys.stderr)
+            except Exception as exc:  # record, keep sweeping
+                med = -1.0
+                print(f"{sf_name} {name}: ERROR {str(exc)[:200]}", file=sys.stderr)
             results[name][sf_name] = round(med, 3)
-            print(f"{sf_name} {name}: {med:.2f}s", file=sys.stderr)
         spark.stop()
 
-    sf_value = {"sf0.01": 0.01, "sf0.1": 0.1, "sf1": 1.0, "sf3": 3.0, "sf10": 10.0}
-    for name, r in results.items():
-        if "sf1" in r and "sf0.1" in r and r["sf0.1"] > 0:
-            r["exp_01_to_1"] = round(math.log10(r["sf1"] / r["sf0.1"]), 2)
-        if "sf0.1" in r and "sf0.01" in r and r["sf0.01"] > 0:
-            r["exp_001_to_01"] = round(math.log10(r["sf0.1"] / r["sf0.01"]), 2)
-        if "sf10" in r and "sf1" in r and r["sf1"] > 0:
-            r["exp_1_to_10"] = round(math.log10(r["sf10"] / r["sf1"]), 2)
-        elif "sf3" in r and "sf1" in r and r["sf1"] > 0:
-            # half-decade fallback, normalized per decade
-            r["exp_1_to_3"] = round(
-                math.log10(r["sf3"] / r["sf1"]) / math.log10(3.0), 2
-            )
+    # per-decade exponent of each SF pair (sf1 -> sf3 is a half decade,
+    # normalized per decade)
+    pairs = [
+        ("exp_01_to_1", "sf0.1", "sf1", 1.0),
+        ("exp_001_to_01", "sf0.01", "sf0.1", 1.0),
+        ("exp_1_to_10", "sf1", "sf10", 1.0),
+        ("exp_1_to_3", "sf1", "sf3", math.log10(3.0)),
+    ]
+    for r in results.values():
+        for key, lo, hi, decades in pairs:
+            if r.get(lo, 0) > 0 and r.get(hi, 0) > 0:
+                r[key] = round(math.log10(r[hi] / r[lo]) / decades, 2)
     load = [round(x, 2) for x in os.getloadavg()]
     print(json.dumps({"results": results, "runs": runs, "load_avg": load}))
 

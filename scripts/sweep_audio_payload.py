@@ -79,15 +79,10 @@ def _pipelines(head_len: int):
     }
 
 
-def _time(df) -> float:
-    t0 = time.perf_counter()
-    df.write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
-
-
 def main() -> None:
     runs = max(1, int(os.environ.get("BENCH_RUNS", "3")))
     from ibc_spark.session import get_spark
+    from ibc_spark.tools.timing import cold_samples, median
 
     results: dict[str, dict[str, float]] = {}
 
@@ -100,8 +95,7 @@ def main() -> None:
         spark = get_spark(f"audio_sweep_{sf_name}")
         docs = _docs_with_long_text(spark, sf_dir, 16384)
         for name, pipe in _pipelines(16384).items():
-            samples = sorted(_time(pipe(docs)) for _ in range(runs))
-            med = samples[len(samples) // 2]
+            med = median(cold_samples(spark, lambda: pipe(docs), runs))
             results.setdefault(name, {})[f"{sf_name}@16k"] = round(med, 3)
             print(f"{sf_name}@16k {name}: {med:.2f}s", file=sys.stderr)
         spark.stop()
@@ -111,8 +105,7 @@ def main() -> None:
     for head_len in (64, 1024, 16384):
         docs = _docs_with_long_text(spark, SF_DIRS["sf0.1"], head_len)
         for name, pipe in _pipelines(head_len).items():
-            samples = sorted(_time(pipe(docs)) for _ in range(runs))
-            med = samples[len(samples) // 2]
+            med = median(cold_samples(spark, lambda: pipe(docs), runs))
             results.setdefault(name, {})[f"sf0.1@{head_len}"] = round(med, 3)
             print(f"sf0.1@{head_len} {name}: {med:.2f}s", file=sys.stderr)
     spark.stop()

@@ -19,7 +19,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
@@ -33,6 +32,7 @@ def main() -> None:
     steps_list = [int(s) for s in sys.argv[1:]] or [3, 10, 30, 100, 300]
     from ibc_spark.registry_ext_text import _bpe_train
     from ibc_spark.session import get_spark
+    from ibc_spark.tools.timing import cold_samples
 
     spark = get_spark("bpe_merge_sweep")
     results: dict[str, dict] = {}
@@ -52,10 +52,7 @@ def main() -> None:
 
     prev_steps, prev_t = 0, 0.0
     for steps in steps_list:
-        t0 = time.perf_counter()
-        w, _frames = _bpe_train(spark, SF_DIR, steps=steps)
-        w.write.format("noop").mode("overwrite").save()
-        t = time.perf_counter() - t0
+        [t] = cold_samples(spark, lambda: _bpe_train(spark, SF_DIR, steps=steps)[0], 1)
         marginal = (t - prev_t) / max(steps - prev_steps, 1)
         results[f"steps_{steps}"] = {
             "total_s": round(t, 2),

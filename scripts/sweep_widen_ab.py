@@ -1,31 +1,31 @@
-"""A/B the r15 widen constants at sf1 (VERDICT r15 #6): re-validate
-``widen_for_arrow_chain``'s quarter width (none / 8 / 32) on two audio
-entries and ``widen_for_compute``'s full width (none / 8 / 32) on one
-video entry, at a scale 10× the bench corpus. The r15 constants were
-tuned on sf0.1; this sweep answers whether the quarter-width choice
-still wins when each partition carries ~1500 rows instead of ~150.
+"""A/B the scan-width helpers of ``ibc_spark.ext.dedup``: time registry
+entries with both ``widen_for_compute`` and ``widen_for_arrow_chain``
+replaced by one variant — ``none`` (identity), ``w8`` or ``w32``
+(repartition when the frame has fewer partitions) — in a fresh session
+per variant, cold-timed by ``ibc_spark.tools.timing``, median of
+BENCH_RUNS (default 3).
 
-Monkeypatches the helpers at their USE sites (registry_ext_pipe binds
-the names at import), fresh session per variant, bench discipline.
+The variant is rebound in every loaded ``ibc_spark`` module whose globals
+hold an original helper: ``ext.dedup`` itself (function-local imports
+read it at call time) and each module that bound the name at import.
 
-Run: ``python scripts/sweep_widen_ab.py`` → JSON on stdout; save to
-``bench_records/sweep_r16_widen_ab_sf1.json``.
+Run: ``SPARK_GRAFT_SF_DIR=<sf dir> python scripts/sweep_widen_ab.py
+entry [entry ...]`` → JSON on stdout, progress on stderr.
+``bench_records/README.md`` lists the command lines of the committed
+ladders.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sys
-import time
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
-AUDIO = ["multimodal_audio_stereo_adpcm", "multimodal_audio_mulaw"]
-VIDEO = ["multimodal_video_mjpeg"]
-SF_DIR = os.path.join(HERE, ".scale", "sf1")
-RUNS = max(1, int(os.environ.get("BENCH_RUNS", "3")))
+VARIANTS = [("none", None), ("w8", 8), ("w32", 32)]
 
 
 def _variant(width: int | None):
@@ -41,54 +41,45 @@ def _variant(width: int | None):
     return widen
 
 
+def _binding_sites(originals) -> list[tuple[object, str, object]]:
+    """(module, attribute, original) for every loaded ibc_spark global
+    that is one of ``originals``."""
+    return [
+        (mod, attr, val)
+        for name, mod in list(sys.modules.items())
+        if name == "ibc_spark" or name.startswith("ibc_spark.")
+        for attr, val in list(vars(mod).items())
+        if any(val is o for o in originals)
+    ]
+
+
 def main() -> None:
-    import ibc_spark.registry_ext_pipe as pipe
-    from ibc_spark.ext.persistreg import release_checkpoints, release_persisted
-    from ibc_spark.io_.sources import read_table
+    names = sys.argv[1:]
+    if not names:
+        raise SystemExit(__doc__)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    runs = max(1, int(os.environ.get("BENCH_RUNS", "3")))
+    from ibc_spark.ext import dedup
     from ibc_spark.registry import QUERIES
-    from ibc_spark.session import get_spark
+    from ibc_spark.tools.timing import cold_samples, median, warm_session
 
+    sites = _binding_sites((dedup.widen_for_compute, dedup.widen_for_arrow_chain))
     results: dict[str, dict[str, float]] = {}
-    for label, width in [("none", None), ("w8", 8), ("w32", 32)]:
-        spark = get_spark(f"widen_ab_{label}")
-        read_table(spark, SF_DIR, "nation").count()
-        import ibc_spark.ext.dedup as dd
-
-        orig_chain = pipe.widen_for_arrow_chain
-        orig_comp = pipe.widen_for_compute
-        orig_dd_chain = dd.widen_for_arrow_chain
-        orig_dd_comp = dd.widen_for_compute
-        pipe.widen_for_arrow_chain = _variant(width)
-        pipe.widen_for_compute = _variant(width)
-        # some entries import the helper function-locally from ext.dedup
-        # (multimodal_video_mjpeg) — patch the source module too, else
-        # that arm silently runs production width (the r16 first-run bug:
-        # its 'variants' differed only by noise)
-        dd.widen_for_arrow_chain = _variant(width)
-        dd.widen_for_compute = _variant(width)
+    for label, width in VARIANTS:
+        spark = warm_session(f"widen_ab_{label}", sf_dir)
+        for mod, attr, _orig in sites:
+            setattr(mod, attr, _variant(width))
         try:
-            for name in AUDIO + VIDEO:
-                samples = []
-                for _ in range(RUNS):
-                    t0 = time.perf_counter()
-                    QUERIES[name](spark, SF_DIR).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    samples.append(time.perf_counter() - t0)
-                    release_persisted()
-                    release_checkpoints(spark)
-                    spark.catalog.clearCache()
-                samples.sort()
-                med = round(samples[len(samples) // 2], 3)
+            for name in names:
+                build = functools.partial(QUERIES[name], spark, sf_dir)
+                med = round(median(cold_samples(spark, build, runs)), 3)
                 results.setdefault(name, {})[label] = med
                 print(f"{label} {name}: {med:.2f}s", file=sys.stderr)
         finally:
-            pipe.widen_for_arrow_chain = orig_chain
-            pipe.widen_for_compute = orig_comp
-            dd.widen_for_arrow_chain = orig_dd_chain
-            dd.widen_for_compute = orig_dd_comp
+            for mod, attr, orig in sites:
+                setattr(mod, attr, orig)
             spark.stop()
-    print(json.dumps({"sf": "sf1", "runs": RUNS, "results": results}))
+    print(json.dumps({"sf": sf_dir, "runs": runs, "results": results}))
 
 
 if __name__ == "__main__":

@@ -220,9 +220,9 @@ def test_spark_submit_pythonpath_independent_of_entry_depth():
 
 def test_attestation_rotation_ordering(monkeypatch):
     """The driver-snapshot ordering: force-recheck first, then never-green
-    (rows-only family), then previously-green OLDEST round first, with
-    this round's deferred additions last — the contract that drains the
-    stale-attestation backlog while keeping sibling pairs co-snapshotted."""
+    (rows-only family), then previously-green OLDEST round first — the
+    contract that drains the stale-attestation backlog while keeping
+    sibling pairs co-snapshotted."""
     import __spark_entry__ as entry
 
     mapping = {f"q{i}": i for i in range(8)}
@@ -232,8 +232,7 @@ def test_attestation_rotation_ordering(monkeypatch):
         lambda: {"q0": 5, "q1": 2, "q2": 4, "q5": 1, "q6": 3},
     )
     monkeypatch.setattr(entry, "_FORCE_RECHECK", {"q2"})
-    monkeypatch.setattr(entry, "_DEFER_TO_NEXT_ROUND", {"q7"})
     got = list(entry._ordered(mapping))
-    # q2 forced; q3/q4 never green; greens oldest-first q5(r1) q1(r2) q6(r3)
-    # q0(r5); deferred q7 dead last
-    assert got == ["q2", "q3", "q4", "q5", "q1", "q6", "q0", "q7"]
+    # q2 forced; q3/q4/q7 never green; greens oldest-first q5(r1) q1(r2)
+    # q6(r3) q0(r5)
+    assert got == ["q2", "q3", "q4", "q7", "q5", "q1", "q6", "q0"]

@@ -1,7 +1,7 @@
 """Contract tests for the driver surface itself (__spark_entry__): the
 rotation machinery must never lose, duplicate, or mistype an entry —
-a typo'd name in _FORCE_RECHECK/_DEFER_TO_NEXT_ROUND silently no-ops,
-and a bug in _ordered would make the driver silently skip entries."""
+a typo'd name in _FORCE_RECHECK silently no-ops, and a bug in _ordered
+would make the driver silently skip entries."""
 
 from __future__ import annotations
 
@@ -38,19 +38,10 @@ def test_rotation_sets_name_real_entries():
     from ibc_spark.registry import QUERIES
 
     assert e._FORCE_RECHECK <= set(QUERIES), e._FORCE_RECHECK - set(QUERIES)
-    assert e._DEFER_TO_NEXT_ROUND <= set(QUERIES), (
-        e._DEFER_TO_NEXT_ROUND - set(QUERIES)
-    )
-    # the two lanes are disjoint: an entry cannot both jump the queue and
-    # be deferred
-    assert not (e._FORCE_RECHECK & e._DEFER_TO_NEXT_ROUND)
 
 
-def test_deferred_entries_sort_last():
+def test_force_recheck_entries_sort_first():
     e = _entry_module()
     order = list(e.queries())
-    n = len(order)
-    for name in e._DEFER_TO_NEXT_ROUND:
-        assert order.index(name) >= n - len(e._DEFER_TO_NEXT_ROUND) - 1, name
     for name in e._FORCE_RECHECK:
         assert order.index(name) < len(e._FORCE_RECHECK), name

@@ -84,6 +84,35 @@ def test_closure_hash_sees_oracle_text():
         ORACLES[name] = original
 
 
+def test_ack_rerecords_only_the_named_entry(tmp_path, monkeypatch):
+    """``ack NAME`` must not also re-pin entries whose green round
+    advanced (that is ``refresh``'s job): on a copy of the manifest with
+    one stale hash and one lagging green round, acking the stale entry
+    changes exactly its row."""
+    import shutil
+
+    copy = tmp_path / "entry_manifest.json"
+    shutil.copy(em.MANIFEST_PATH, copy)
+    monkeypatch.setattr(em, "MANIFEST_PATH", str(copy))
+    target, lagging = "multimodal_audio_resample", "q1_pricing_summary"
+    before = em.load_manifest()
+    assert em._last_green_rounds()[lagging] > 1
+    before["entries"][target]["hash"] = "0" * 32
+    before["entries"][lagging]["green_round"] = 1
+    em.save_manifest(before)
+
+    assert em.main(["ack", target]) == 0
+    after = em.load_manifest()
+    changed = {
+        n for n in before["entries"] if before["entries"][n] != after["entries"][n]
+    }
+    assert changed == {target}
+    assert after["entries"][target] == {
+        "hash": em.compute_entry_hash(target),
+        "green_round": before["entries"][target]["green_round"],
+    }
+
+
 def test_testdata_snapshot_is_the_validated_one():
     changed = []
     for sf, pin in _FIXTURE_PINS.items():
