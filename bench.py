@@ -12,17 +12,14 @@ cold runs (``ibc_spark.tools.timing.cold_samples``: noop write, then
 every persist, checkpoint block and the catalog cache released). Entries
 whose median exceeds SLOW_THRESHOLD_SEC are topped up to SLOW_RUNS runs.
 $BENCH_NAMES (comma-separated) restricts the pass to a subset. Each
-entry's stderr line gives its change against the newest committed full
-record in bench_records/.
+entry's median goes to stderr as it finishes.
 """
 
 from __future__ import annotations
 
 import functools
-import glob
 import json
 import os
-import re
 import sys
 import time
 
@@ -38,24 +35,6 @@ SLOW_THRESHOLD_SEC = 3.0
 SLOW_RUNS = 5
 
 
-def prior_bench() -> dict[str, float]:
-    """Per-query medians of the newest bench_records/bench_r*_full_*.json;
-    {} when there is none."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    fulls = []
-    for path in glob.glob(os.path.join(here, "bench_records", "bench_r*_full_*.json")):
-        m = re.search(r"bench_r(\d+)_full_", path)
-        if m:
-            fulls.append((int(m.group(1)), path))
-    if not fulls:
-        return {}
-    try:
-        with open(max(fulls)[1]) as f:
-            return {k: float(v) for k, v in json.load(f)["queries"].items()}
-    except (OSError, ValueError, KeyError, TypeError):
-        return {}
-
-
 def main() -> None:
     from ibc_spark.registry import QUERIES
     from ibc_spark.tools.timing import cold_samples, median, warm_session
@@ -64,7 +43,6 @@ def main() -> None:
     # progress bars are disabled in get_spark (static conf) so stdout stays
     # parseable JSON.
     spark = warm_session("ibc_spark_bench", sf_dir)
-    previous = prior_bench()
 
     names = sorted(QUERIES)
     only = os.environ.get("BENCH_NAMES")
@@ -87,12 +65,8 @@ def main() -> None:
                 samples = sorted(samples + cold_samples(spark, build, SLOW_RUNS - runs))
             run_counts[name] = len(samples)
             timings[name] = round(median(samples), 4)
-            delta = ""
-            if previous.get(name, 0) > 0:
-                pct = 100.0 * (timings[name] - previous[name]) / previous[name]
-                delta = f" ({pct:+.0f}% vs prior record {previous[name]:.2f}s)"
             print(
-                f"BENCH {name}: {timings[name]:.2f}s median of {len(samples)}{delta}",
+                f"BENCH {name}: {timings[name]:.2f}s median of {len(samples)}",
                 file=sys.stderr,
             )
         except Exception as exc:  # a failing query must not hide the others

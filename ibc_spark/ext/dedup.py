@@ -38,50 +38,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ibc_spark.ext import width
 from ibc_spark.ext.foldspec import md5_double_hash, md5_double_hash_py
 from ibc_spark.ext.persistreg import persist_tracked
 from ibc_spark.ext.text import tokens
 
 MERSENNE = 2147483647  # 2^31-1
 
-
-def widen_for_compute(df: DataFrame) -> DataFrame:
-    """Widen a SCAN-narrow frame before a compute-heavy per-row kernel.
-
-    Parquet scan parallelism follows input BYTES (maxPartitionBytes), which
-    under-parallelizes CPU-bound projections over small-but-dense inputs:
-    a 6 MB text table reads as 2 splits, so tokenise→shingle→persist and
-    the posting explode that follows run on 2 of 32 cores (measured 6.9 s
-    vs 1.0 s for the same kernel scan-wide at sf1, and ~25 s of the
-    33 s `dedup_ngram_containment` first run). Repartition to the
-    session's default parallelism ONLY when the scan is narrower — on a
-    real 100 TB scan (thousands of input splits) this is a no-op, so the
-    cheap raw-text shuffle is paid exactly when it buys CPU width."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
-def widen_for_arrow_chain(df: DataFrame) -> DataFrame:
-    """Quarter-width :func:`widen_for_compute` for CHAINED Arrow-kernel
-    pipelines (attach → transcode → features is three mapInPandas stages,
-    each paying a per-task python-worker/Arrow boundary cost).
-
-    Full core-width repartitioning was measured SLOWER than no widening
-    at all for the light audio codec entries once their per-sample loops
-    were vectorized (r15 A/B at sf0.1, 3-run best: stereo-ADPCM none/8/32
-    = 0.90/0.56/1.12 s, mu-law 0.82/0.48/0.95 s, resample
-    0.43/0.39/0.65 s) — 3 stages × 32 tasks of ~150 rows is boundary
-    overhead, not parallelism. Quarter width keeps the kernel parallel
-    while batches stay big enough for the vector kernels. Same scale
-    posture as widen_for_compute: on a real multi-split scan this is a
-    no-op, so the constant only shapes the small-corpus bench, never the
-    100 TB plan."""
-    target = max(2, df.sparkSession.sparkContext.defaultParallelism // 4)
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 # Live `bloom_flag_docs` bitset broadcasts, oldest first — bounded so
 # repeated invocations never accumulate executor state, with a small
@@ -342,7 +305,7 @@ def spans_rewrite(
         F.split(F.col(text_col), r"\s+"), lambda x: x != ""
     )
     base = persist_tracked(
-        widen_for_compute(df).select(
+        width.widen(df, "compute").select(
             F.col(id_col).alias("doc_id"),
             tokens(F.col(text_col)).alias("toks"),
             raw_toks.alias("raw_toks"),
@@ -422,7 +385,7 @@ def boilerplate_passages(
     expensive part; without the persist it runs twice)."""
     windows_np = _window_passages(n, stride=1)
 
-    base = widen_for_compute(df).select(
+    base = width.widen(df, "compute").select(
         F.col(id_col).alias("doc_id"),
         F.col(group_col).alias("grp"),
         tokens(F.col(text_col)).alias("toks"),
@@ -517,7 +480,7 @@ def ngram_jaccard_pairs(
     high-cardinality, so skew lands on genuinely common shingles only;
     AQE skew-split covers those.
     """
-    raw = widen_for_compute(df).select(
+    raw = width.widen(df, "compute").select(
         F.col(id_col).alias("doc_id"),
         F.col(block_col).alias("block"),
         shingles(tokens(F.col(text_col)), n).alias("sh"),
@@ -663,7 +626,7 @@ def ngram_containment_pairs(
     (block, shingle) is high-cardinality; skew lands on genuinely common
     shingles only, which AQE skew-split covers."""
     base = persist_tracked(
-        widen_for_compute(df).select(
+        width.widen(df, "compute").select(
             F.col(id_col).alias("doc_id"),
             F.col(block_col).alias("block"),
             shingles(tokens(F.col(text_col)), n).alias("sh"),
@@ -1102,7 +1065,7 @@ def _hashed_shingle_frame(
     Tracked in ``ext.persistreg``; session owners release after
     materializing results."""
     hasher = _hash_shingles_portable if portable else _hash_shingles
-    frame = widen_for_compute(df).select(
+    frame = width.widen(df, "compute").select(
         F.col(id_col).alias("doc_id"),
         hasher(shingles(tokens(F.col(text_col)), n)).alias("hsh"),
     )

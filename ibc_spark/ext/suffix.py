@@ -50,7 +50,8 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ibc_spark.ext.dedup import _gap_merge_span_ids, widen_for_compute
+from ibc_spark.ext import width as scan_width
+from ibc_spark.ext.dedup import _gap_merge_span_ids
 from ibc_spark.ext.persistreg import persist_tracked
 from ibc_spark.ext.text import tokens
 
@@ -659,13 +660,10 @@ def _sa_core(
     any content. Outputs are contract-identical, pinned by the
     brute-force tests on both paths.
 
-    The corpus scan is widened first (guide §2/§6): parquet split count
-    follows input BYTES, so a small-but-dense documents table reads as
-    one split and every corpus-linear pass (the sizes aggregate, the
-    range-sampler's stream recompute, the exchange feed) would run on one
-    core — measured 3×~2 s single-task jobs per entry at sf0.1. On a real
-    multi-split scan the widen is a no-op."""
-    df = widen_for_compute(df)
+    The corpus scan is widened first (:mod:`ibc_spark.ext.width`), so
+    every corpus-linear pass (the sizes aggregate, the range-sampler's
+    stream recompute, the exchange feed) runs at core width."""
+    df = scan_width.widen(df, "compute")
     corpus = _corpus(df, id_col=id_col, text_col=text_col)
     sizes = _sizes_of(corpus, id_name=id_col)
     bound, n_pos, parts, flat_ok, max_chars = sizes
@@ -722,7 +720,7 @@ def build_suffix_array(
     size constant per round at the cost of one corpus-linear pass."""
     if corpus is None:
         corpus = _corpus(
-            widen_for_compute(df), id_col=id_col, text_col=text_col
+            scan_width.widen(df, "compute"), id_col=id_col, text_col=text_col
         )
     bound, _n_pos, parts, flat_ok, _max_chars = sizes or _sizes_of(
         corpus, id_name=id_col

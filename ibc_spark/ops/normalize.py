@@ -8,7 +8,8 @@ spellings and routes renamed columns to per-table allow-lists:
 - P2 rename map: sheet header → sql column
   (``SHEET_COLS_TO_SQL_COLS`` ``staffing-roster-pipeline.py:34-56``).
 - P3 allow-list split: one canonical frame → users-cols / consultants-cols
-  (``USERS_COLS``/``CONSULTANTS_COLS`` ``staffing-roster-pipeline.py:31-32``).
+  (``USERS_COLS``/``CONSULTANTS_COLS`` ``staffing-roster-pipeline.py:31-32``;
+  the two selects live in ``pipelines/staffing_roster.py``).
 
 Columns the reference silently drops become a loud validation report
 (:func:`schema_report`); the known ``consultant_score`` vs
@@ -129,16 +130,6 @@ def coalesce_headers(
     if keep_rest:
         out += [F.col(f"`{c}`") for c in have if c not in consumed]
     return df.select(*out)
-
-
-def split_allowlists(
-    df: DataFrame, *allowlists: Sequence[str]
-) -> tuple[DataFrame, ...]:
-    """P3 — route one canonical frame into N column-allow-listed frames
-    (two selects from one cached frame; a column may appear in several)."""
-    return tuple(
-        df.select(*[c for c in allow if c in df.columns]) for allow in allowlists
-    )
 
 
 def schema_report(df: DataFrame, expected: Sequence[str]) -> dict[str, list[str]]:

@@ -12,7 +12,7 @@ import pandas as pd  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
-from ibc_spark.ext import dedup, multimodal, similarity, text  # noqa: F401
+from ibc_spark.ext import dedup, multimodal, similarity, text, width  # noqa: F401
 from ibc_spark.io_.sources import read_table  # noqa: F401
 from ibc_spark.registry_core import query  # noqa: F401
 from ibc_spark.registry_ext_base import (  # noqa: F401
@@ -166,12 +166,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh = dedup.minhash_lsh_pairs(
         d, id_col="doc_id", text_col="text", k=32, bands=8, n=3, threshold=0.5
     )
-    # widen + persist: the raw-shingle frame re-attaches TWICE (id_a and
-    # id_b legs); unwidened it tokenized the whole corpus twice on one
-    # core (the parquet scan is a single split at bench scale) — r16,
-    # guide §2/§6.
+    # persisted: the raw-shingle frame re-attaches TWICE (id_a and id_b
+    # legs)
     sh = dedup.persist_tracked(
-        dedup._shingle_frame(dedup.widen_for_compute(d), "doc_id", "text", 3)
+        dedup._shingle_frame(width.widen(d, "compute"), "doc_id", "text", 3)
     )
     raw_checked = (
         lsh.join(

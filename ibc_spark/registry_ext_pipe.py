@@ -11,9 +11,8 @@ import pandas as pd  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
-from ibc_spark.ext import dedup, multimodal, similarity, text  # noqa: F401
+from ibc_spark.ext import dedup, multimodal, similarity, text, width  # noqa: F401
 from ibc_spark.io_.sources import read_table
-from ibc_spark.ext.dedup import widen_for_arrow_chain, widen_for_compute  # noqa: F401
 from ibc_spark.registry_core import query  # noqa: F401
 from ibc_spark.registry_ext_base import (  # noqa: F401
     _AUG_SQL,
@@ -52,12 +51,8 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     small integers stored as floats; the query surface serializes them to
     a CSV of ints so the driver's scalar-only canonicalizer can hash them
     (the array form stays available via :func:`multimodal.extract_features`)."""
-    # r15: the documents scan is one split at bench scale — widen to
-    # quarter CPU width for the 3-stage Arrow chain (A/B-measured; see
-    # widen_for_arrow_chain) and project to the two columns the kernels
-    # read before the shuffle; no-op at 100 TB
-    d = widen_for_arrow_chain(
-        read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    d = width.widen(
+        read_table(spark, sf_dir, "documents").select("doc_id", "text"), "chain"
     )
     feats = multimodal.extract_features(multimodal.attach_binary(d))
     return feats.select(
@@ -86,12 +81,8 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling: 1:N mapInPandas fan-out of evenly-spaced byte
     windows per media payload (the keyframe-extraction shape; codec seam
     stubbed, offsets + bytes hash-checked via hex)."""
-    # r15: the documents scan is one split at bench scale — widen to
-    # quarter CPU width for the 3-stage Arrow chain (A/B-measured; see
-    # widen_for_arrow_chain) and project to the two columns the kernels
-    # read before the shuffle; no-op at 100 TB
-    d = widen_for_arrow_chain(
-        read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    d = width.widen(
+        read_table(spark, sf_dir, "documents").select("doc_id", "text"), "chain"
     )
     frames = multimodal.sample_frames(
         multimodal.attach_binary(d), n_frames=3, frame_size=8
@@ -533,11 +524,9 @@ def _image_roundtrip(spark: SparkSession, sf_dir: str, encoder) -> DataFrame:
 
     from ibc_spark.ext.multimodal import decode_image
 
-    # r15: widen the one-split embeddings scan to CPU width for the
-    # per-row codec kernel (no-op at 100 TB), same posture as the JPEG
-    # attestation entries
-    e = widen_for_compute(
-        read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    e = width.widen(
+        read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding"),
+        "compute",
     )
     schema = (
         "vec_id long, width int, height int, "
@@ -971,12 +960,8 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Entropy-coded audio (MP3/FLAC/OGG) stays the documented seam
     (``ext/multimodal.py::decode_audio``). Narrow mapInPandas ×2, no
     shuffle until the driver's canonical sort."""
-    # r15: the documents scan is one split at bench scale — widen to
-    # quarter CPU width for the 3-stage Arrow chain (A/B-measured; see
-    # widen_for_arrow_chain) and project to the two columns the kernels
-    # read before the shuffle; no-op at 100 TB
-    d = widen_for_arrow_chain(
-        read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    d = width.widen(
+        read_table(spark, sf_dir, "documents").select("doc_id", "text"), "chain"
     )
     return _audio_feature_pipeline(d)
 
@@ -1050,12 +1035,8 @@ def multimodal_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     remaining audio-DSP seam is rational-rate (L/M polyphase) resampling;
     integer-factor decimation is the production-common case (48k→16k,
     16k→8k)."""
-    # r15: the documents scan is one split at bench scale — widen to
-    # quarter CPU width for the 3-stage Arrow chain (A/B-measured; see
-    # widen_for_arrow_chain) and project to the two columns the kernels
-    # read before the shuffle; no-op at 100 TB
-    d = widen_for_arrow_chain(
-        read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    d = width.widen(
+        read_table(spark, sf_dir, "documents").select("doc_id", "text"), "chain"
     )
     resampled = multimodal.resample_audio(multimodal.attach_audio(d), factor=4)
     return multimodal.audio_features(resampled)
@@ -1129,12 +1110,8 @@ def multimodal_audio_resample_rational(spark: SparkSession, sf_dir: str) -> Data
     re-encoded 12 kHz WAV are hash-checked, proving codec round-trip,
     zero-stuff indexing, filter arithmetic, and output-length ``ceil``
     semantics together. Narrow mapInPandas ×3, no shuffle."""
-    # r15: the documents scan is one split at bench scale — widen to
-    # quarter CPU width for the 3-stage Arrow chain (A/B-measured; see
-    # widen_for_arrow_chain) and project to the two columns the kernels
-    # read before the shuffle; no-op at 100 TB
-    d = widen_for_arrow_chain(
-        read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    d = width.widen(
+        read_table(spark, sf_dir, "documents").select("doc_id", "text"), "chain"
     )
     resampled = multimodal.resample_audio_rational(
         multimodal.attach_audio(d), up=3, down=4
@@ -1194,12 +1171,8 @@ def multimodal_audio_vad_spectral(spark: SparkSession, sf_dir: str) -> DataFrame
     remaining seam is the model-based layer (mel filterbank + learned
     classifier); the frame/band plumbing below it is real. Narrow
     mapInPandas ×2, 1:N frame fan-out, no shuffle."""
-    # r15: the documents scan is one split at bench scale — widen to
-    # quarter CPU width for the 3-stage Arrow chain (A/B-measured; see
-    # widen_for_arrow_chain) and project to the two columns the kernels
-    # read before the shuffle; no-op at 100 TB
-    d = widen_for_arrow_chain(
-        read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    d = width.widen(
+        read_table(spark, sf_dir, "documents").select("doc_id", "text"), "chain"
     )
     return multimodal.spectral_vad_frames(multimodal.attach_audio(d))
 
@@ -1292,12 +1265,8 @@ def multimodal_audio_stereo_resample(spark: SparkSession, sf_dir: str) -> DataFr
     filter never reads across an L/R boundary, frames decimate as units,
     and the stereo container round-trips. Narrow mapInPandas ×3, no
     shuffle."""
-    # r15: the documents scan is one split at bench scale — widen to
-    # quarter CPU width for the 3-stage Arrow chain (A/B-measured; see
-    # widen_for_arrow_chain) and project to the two columns the kernels
-    # read before the shuffle; no-op at 100 TB
-    d = widen_for_arrow_chain(
-        read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    d = width.widen(
+        read_table(spark, sf_dir, "documents").select("doc_id", "text"), "chain"
     )
     resampled = multimodal.resample_audio(
         multimodal.attach_audio(d, channels=2), factor=4
@@ -1343,12 +1312,8 @@ def multimodal_audio_stereo_resample_rational(
     channel-aware feature reduction proves the stereo container
     round-trips at the non-integral rate change too. Narrow mapInPandas
     ×3, no shuffle."""
-    # r15: the documents scan is one split at bench scale — widen to
-    # quarter CPU width for the 3-stage Arrow chain (A/B-measured; see
-    # widen_for_arrow_chain) and project to the two columns the kernels
-    # read before the shuffle; no-op at 100 TB
-    d = widen_for_arrow_chain(
-        read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    d = width.widen(
+        read_table(spark, sf_dir, "documents").select("doc_id", "text"), "chain"
     )
     resampled = multimodal.resample_audio_rational(
         multimodal.attach_audio(d, channels=2), up=3, down=4
@@ -1395,12 +1360,8 @@ def multimodal_audio_stereo_vad_spectral(
     decisions differ too: a kernel that framed the interleaved stream (or
     scored only channel 0 twice) hash-mismatches. Narrow mapInPandas ×2,
     1:N fan-out per channel, no shuffle."""
-    # r15: the documents scan is one split at bench scale — widen to
-    # quarter CPU width for the 3-stage Arrow chain (A/B-measured; see
-    # widen_for_arrow_chain) and project to the two columns the kernels
-    # read before the shuffle; no-op at 100 TB
-    d = widen_for_arrow_chain(
-        read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    d = width.widen(
+        read_table(spark, sf_dir, "documents").select("doc_id", "text"), "chain"
     )
     return multimodal.spectral_vad_frames(multimodal.attach_audio(d, channels=2))
 
@@ -1416,12 +1377,8 @@ def multimodal_audio_float_pcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plain int16 entry's — the shared oracle hash-proves the entire
     float codec path (header fields, 4-byte frames, quantizer) against
     the same declarative spec. Narrow mapInPandas ×3, no shuffle."""
-    # r15: the documents scan is one split at bench scale — widen to
-    # quarter CPU width for the 3-stage Arrow chain (A/B-measured; see
-    # widen_for_arrow_chain) and project to the two columns the kernels
-    # read before the shuffle; no-op at 100 TB
-    d = widen_for_arrow_chain(
-        read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    d = width.widen(
+        read_table(spark, sf_dir, "documents").select("doc_id", "text"), "chain"
     )
     return multimodal.audio_features(
         multimodal.transcode_audio_float(multimodal.attach_audio(d))
@@ -1438,12 +1395,8 @@ def multimodal_audio_pcm24(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle hash-proves the 24-bit container path (3-byte frame packing,
     sign extension, block alignment) exactly like the float-PCM twin.
     Narrow mapInPandas ×3, no shuffle."""
-    # r15: the documents scan is one split at bench scale — widen to
-    # quarter CPU width for the 3-stage Arrow chain (A/B-measured; see
-    # widen_for_arrow_chain) and project to the two columns the kernels
-    # read before the shuffle; no-op at 100 TB
-    d = widen_for_arrow_chain(
-        read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    d = width.widen(
+        read_table(spark, sf_dir, "documents").select("doc_id", "text"), "chain"
     )
     return multimodal.audio_features(
         multimodal.transcode_audio_pcm(multimodal.attach_audio(d), bits=24)
@@ -1462,12 +1415,8 @@ def multimodal_audio_pcm8(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bias, 1-byte frames) — the lossy quantizer itself is pinned by
     hypothesis over arbitrary waveforms in pytest. Narrow mapInPandas
     ×3, no shuffle."""
-    # r15: the documents scan is one split at bench scale — widen to
-    # quarter CPU width for the 3-stage Arrow chain (A/B-measured; see
-    # widen_for_arrow_chain) and project to the two columns the kernels
-    # read before the shuffle; no-op at 100 TB
-    d = widen_for_arrow_chain(
-        read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    d = width.widen(
+        read_table(spark, sf_dir, "documents").select("doc_id", "text"), "chain"
     )
     return multimodal.audio_features(
         multimodal.transcode_audio_pcm(multimodal.attach_audio(d), bits=8)
@@ -1561,12 +1510,8 @@ def multimodal_audio_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature reduction are hash-checked against DuckDB. MP3/FLAC remain
     the documented entropy-coding seam. Narrow mapInPandas ×3, no
     shuffle."""
-    # r15: the documents scan is one split at bench scale — widen to
-    # quarter CPU width for the 3-stage Arrow chain (A/B-measured; see
-    # widen_for_arrow_chain) and project to the two columns the kernels
-    # read before the shuffle; no-op at 100 TB
-    d = widen_for_arrow_chain(
-        read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    d = width.widen(
+        read_table(spark, sf_dir, "documents").select("doc_id", "text"), "chain"
     )
     return multimodal.audio_features(
         multimodal.transcode_audio_adpcm(multimodal.attach_audio(d))
@@ -1615,11 +1560,8 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-mismatch; fps attests the avih frame-interval field. DCT-coded
     video (H.264/VP9) stays the documented entropy seam, same as
     JPEG/MP3. Narrow mapInPandas ×2, 1:N frame fan-out, no shuffle."""
-    # r15: the documents scan is one split at bench scale — widen to
-    # CPU width for the per-row codec kernels (no-op at 100 TB), and
-    # project to the two columns the kernels read before the shuffle
-    d = widen_for_compute(
-        read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    d = width.widen(
+        read_table(spark, sf_dir, "documents").select("doc_id", "text"), "compute"
     )
     return multimodal.video_frame_features(multimodal.attach_video(d))
 
@@ -1661,11 +1603,8 @@ def multimodal_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join on (doc, y, x, c) — a decoder misaligning frames by one
     hash-mismatches every row. Narrow mapInPandas ×2, 1:N transition
     fan-out, no shuffle."""
-    # r15: the documents scan is one split at bench scale — widen to
-    # CPU width for the per-row codec kernels (no-op at 100 TB), and
-    # project to the two columns the kernels read before the shuffle
-    d = widen_for_compute(
-        read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    d = width.widen(
+        read_table(spark, sf_dir, "documents").select("doc_id", "text"), "compute"
     )
     return multimodal.scene_cut_frames(multimodal.attach_video(d))
 
@@ -1711,11 +1650,8 @@ def multimodal_video_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on the signature with map-side combine — at 100 TB the same
     plan, signatures being 16 bytes/frame. The oracle re-derives every
     frame from the text and replays the two-level aggregation."""
-    # r15: the documents scan is one split at bench scale — widen to
-    # CPU width for the per-row codec kernels (no-op at 100 TB), and
-    # project to the two columns the kernels read before the shuffle
-    d = widen_for_compute(
-        read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    d = width.widen(
+        read_table(spark, sf_dir, "documents").select("doc_id", "text"), "compute"
     )
     feats = multimodal.video_frame_features(multimodal.attach_video(d))
     # Exclude errors-as-data NULL rows BEFORE the signature groupBy
@@ -1820,12 +1756,8 @@ def multimodal_audio_mulaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar SQL expression per sample — every byte of the companded
     container (fmt code 7, fact chunk, 1-byte frames) is hash-checked.
     Narrow mapInPandas ×3, no shuffle."""
-    # r15: the documents scan is one split at bench scale — widen to
-    # quarter CPU width for the 3-stage Arrow chain (A/B-measured; see
-    # widen_for_arrow_chain) and project to the two columns the kernels
-    # read before the shuffle; no-op at 100 TB
-    d = widen_for_arrow_chain(
-        read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    d = width.widen(
+        read_table(spark, sf_dir, "documents").select("doc_id", "text"), "chain"
     )
     return multimodal.audio_features(
         multimodal.transcode_audio_g711(multimodal.attach_audio(d), law="mulaw")
@@ -1844,12 +1776,8 @@ def multimodal_audio_alaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry; together they close every fixed-table WAVE format — the
     remaining audio seam is true entropy coding (MP3-in-WAV). Narrow
     mapInPandas ×3, no shuffle."""
-    # r15: the documents scan is one split at bench scale — widen to
-    # quarter CPU width for the 3-stage Arrow chain (A/B-measured; see
-    # widen_for_arrow_chain) and project to the two columns the kernels
-    # read before the shuffle; no-op at 100 TB
-    d = widen_for_arrow_chain(
-        read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    d = width.widen(
+        read_table(spark, sf_dir, "documents").select("doc_id", "text"), "chain"
     )
     return multimodal.audio_features(
         multimodal.transcode_audio_g711(multimodal.attach_audio(d), law="alaw")
@@ -1903,12 +1831,8 @@ def multimodal_audio_stereo_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame
     with (doc, channel) as the recursion key, feeding the shared
     channel-aware stereo feature reduction (zero-crossings never counted
     across L/R). Narrow mapInPandas ×3, no shuffle."""
-    # r15: the documents scan is one split at bench scale — widen to
-    # quarter CPU width for the 3-stage Arrow chain (A/B-measured; see
-    # widen_for_arrow_chain) and project to the two columns the kernels
-    # read before the shuffle; no-op at 100 TB
-    d = widen_for_arrow_chain(
-        read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    d = width.widen(
+        read_table(spark, sf_dir, "documents").select("doc_id", "text"), "chain"
     )
     return multimodal.audio_features(
         multimodal.transcode_audio_adpcm(multimodal.attach_audio(d, channels=2))
@@ -1952,12 +1876,8 @@ def multimodal_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame
     aware since r12 (explicit channel column, 0 on this mono corpus).
     Narrow mapInPandas ×2, no shuffle; the spectral/model VAD a speech
     stack adds is the documented seam."""
-    # r15: the documents scan is one split at bench scale — widen to
-    # quarter CPU width for the 3-stage Arrow chain (A/B-measured; see
-    # widen_for_arrow_chain) and project to the two columns the kernels
-    # read before the shuffle; no-op at 100 TB
-    d = widen_for_arrow_chain(
-        read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    d = width.widen(
+        read_table(spark, sf_dir, "documents").select("doc_id", "text"), "chain"
     )
     return multimodal.vad_segments(multimodal.attach_audio(d))
 
@@ -1995,12 +1915,8 @@ def multimodal_audio_stereo_vad_segments(
     so its runs differ: a kernel that thresholded the interleaved stream
     would merge/split segments across L/R and hash-mismatch. Narrow
     mapInPandas ×2, 1:N fan-out, no shuffle."""
-    # r15: the documents scan is one split at bench scale — widen to
-    # quarter CPU width for the 3-stage Arrow chain (A/B-measured; see
-    # widen_for_arrow_chain) and project to the two columns the kernels
-    # read before the shuffle; no-op at 100 TB
-    d = widen_for_arrow_chain(
-        read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    d = width.widen(
+        read_table(spark, sf_dir, "documents").select("doc_id", "text"), "chain"
     )
     return multimodal.vad_segments(multimodal.attach_audio(d, channels=2))
 
@@ -2084,10 +2000,10 @@ def _jpeg_mcu_attest(spark: SparkSession, sf_dir: str, encode_fn) -> DataFrame:
     interleave/upsample bug mismatches loudly)."""
     import numpy as np
 
-    from ibc_spark.ext.dedup import widen_for_compute
 
-    e = widen_for_compute(
-        read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    e = width.widen(
+        read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding"),
+        "compute",
     )
     schema = (
         "vec_id long, mcu_idx int, r_in int, g_in int, b_in int, "
@@ -2155,9 +2071,9 @@ def multimodal_image_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`_jpeg_mcu_attest`). Non-flat content, quality-scaled tables
     and restart markers are pinned against the scalar reference decoder
     in tests/test_jpegcodec.py — the hypothesis arm of the two-sided
-    attestation. Arrow-batched ``mapInPandas``, scan widened to CPU
-    width (no-op at 100 TB); entropy decode is per-payload sequential
-    like every Huffman stream, parallel across rows."""
+    attestation. Arrow-batched ``mapInPandas``; entropy decode is
+    per-payload sequential like every Huffman stream, parallel across
+    rows."""
     from ibc_spark.ext.jpegcodec import encode_jpeg_baseline
 
     return _jpeg_mcu_attest(spark, sf_dir, encode_jpeg_baseline)
@@ -2230,10 +2146,8 @@ def multimodal_video_rle(spark: SparkSession, sf_dir: str) -> DataFrame:
     unlocked by the r14 JPEG codec and noted as the next seam. The
     DuckDB oracle re-derives every pixel from the text (index formula →
     palette arithmetic) and replays the aggregation. 1:N narrow
-    ``mapInPandas``, scan widened to CPU width (no-op at 100 TB)."""
-    from ibc_spark.ext.dedup import widen_for_compute
-
-    d = widen_for_compute(read_table(spark, sf_dir, "documents"))
+    ``mapInPandas``."""
+    d = width.widen(read_table(spark, sf_dir, "documents"), "compute")
     feats = multimodal.video_frame_features(multimodal.attach_video_rle(d))
     return feats.where(F.col("frame_idx").isNotNull())
 
@@ -2304,11 +2218,8 @@ def multimodal_video_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the raw text — the strongest SQL attestation an entropy-coded
     video container can get. Non-flat frames, quality-scaled tables and
     the scalar reference pin live in tests/test_jpegcodec.py +
-    test_multimodal_video.py. 1:N narrow ``mapInPandas``, scan widened
-    to CPU width (no-op at 100 TB)."""
-    from ibc_spark.ext.dedup import widen_for_compute
-
-    d = widen_for_compute(read_table(spark, sf_dir, "documents"))
+    test_multimodal_video.py. 1:N narrow ``mapInPandas``."""
+    d = width.widen(read_table(spark, sf_dir, "documents"), "compute")
     feats = multimodal.video_frame_features(multimodal.attach_video_mjpeg(d))
     return feats.where(F.col("frame_idx").isNotNull())
 
@@ -2343,15 +2254,14 @@ def multimodal_image_gif_animated(spark: SparkSession, sf_dir: str) -> DataFrame
     growth, KwKwK, sub-block framing) is inside the hash. The LZW
     machinery itself is additionally pinned by hypothesis round-trips
     (table-full re-CLEAR, deferred-clear tolerance, interlacing) in
-    tests/test_gifcodec.py. 1:N narrow ``mapInPandas``, scan widened to
-    CPU width (no-op at 100 TB)."""
+    tests/test_gifcodec.py. 1:N narrow ``mapInPandas``."""
     import numpy as np
 
-    from ibc_spark.ext.dedup import widen_for_compute
     from ibc_spark.ext.gifcodec import decode_gif, encode_gif
 
-    e = widen_for_compute(
-        read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    e = width.widen(
+        read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding"),
+        "compute",
     )
     schema = (
         "vec_id long, frame_idx int, px_idx int, idx_in int, "
@@ -2426,15 +2336,8 @@ def multimodal_audio_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     machinery (LPC/wasted-bits/escape-partition decode paths, stereo
     assignments, CRC rejection) is pinned by hypothesis in
     tests/test_flaccodec.py. MP3/AAC remain the documented
-    psychoacoustic seam. Narrow mapInPandas ×3, no shuffle; scan
-    widened to QUARTER width like the rest of the audio chains (r16 A/B:
-    32/8/none sorted 3-run sets [1.17,1.30,5.57]/[0.70,0.80,0.80]/
-    [1.78,1.87,1.87] — quarter width is both ~1.6× faster and free of
-    the full-width 5 s outlier mode, 32 workers × 3 chained Arrow stages
-    being the instability; no-op at 100 TB)."""
-    from ibc_spark.ext.dedup import widen_for_arrow_chain
-
-    d = widen_for_arrow_chain(read_table(spark, sf_dir, "documents"))
+    psychoacoustic seam. Narrow mapInPandas ×3, no shuffle."""
+    d = width.widen(read_table(spark, sf_dir, "documents"), "chain")
     return multimodal.audio_features(
         multimodal.transcode_audio_flac(multimodal.attach_audio(d))
     )
@@ -2455,12 +2358,8 @@ def multimodal_audio_stereo_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     to. Channel 1's waveform differs by construction, so a decoder that
     mixed the assignment up (or lost the side channel's extra bit)
     would hash-mismatch the channel-aware features oracle. Lossless ⇒
-    the oracle reads the raw synthetic samples directly. Scan widened
-    to QUARTER width like the mono twin (r16 A/B — see
-    ``multimodal_audio_flac``; no-op at 100 TB)."""
-    from ibc_spark.ext.dedup import widen_for_arrow_chain
-
-    d = widen_for_arrow_chain(read_table(spark, sf_dir, "documents"))
+    the oracle reads the raw synthetic samples directly."""
+    d = width.widen(read_table(spark, sf_dir, "documents"), "chain")
     return multimodal.audio_features(
         multimodal.transcode_audio_flac(
             multimodal.attach_audio(d, channels=2), mid_side=True
@@ -2483,13 +2382,9 @@ def streaming_audio_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ibc_spark.registry_extras import _run_stream_to_memory
     from ibc_spark.streaming.sources import read_documents_stream
 
-    # r15: the single-file micro-batch arrives as ONE partition, so the
-    # whole codec loop ran on one core. A stateless repartition before
-    # the Arrow stages moves only (doc_id, text); quarter width A/B-won
-    # over full width (1.54 s vs 2.92 s, 5-run median — same per-task
-    # Arrow-boundary economics as widen_for_arrow_chain).
-    docs = read_documents_stream(spark, sf_dir).select("doc_id", "text")
-    docs = docs.repartition(max(2, spark.sparkContext.defaultParallelism // 4))
+    docs = width.widen(
+        read_documents_stream(spark, sf_dir).select("doc_id", "text"), "chain"
+    )
     feats = multimodal.audio_features(
         multimodal.transcode_audio_flac(multimodal.attach_audio(docs))
     )

@@ -10,7 +10,7 @@ import pandas as pd  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
-from ibc_spark.ext import dedup, multimodal, similarity, text  # noqa: F401
+from ibc_spark.ext import dedup, multimodal, similarity, text, width  # noqa: F401
 from ibc_spark.io_.sources import read_table  # noqa: F401
 from ibc_spark.ext.foldspec import (
     kmv_estimate,
@@ -878,12 +878,10 @@ def profile_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension frame, not data scale. All md5/sort/double arithmetic —
     the full matrix replays bit-for-bit in DuckDB."""
     d = read_table(spark, sf_dir, "documents")
-    from ibc_spark.ext.dedup import shingles, tokens, widen_for_compute
+    from ibc_spark.ext.dedup import shingles, tokens
 
-    # tokenize→shingle→md5 is CPU-bound map work over a single-split
-    # scan at bench scale — widen first (no-op multi-split; r16)
     h = (
-        widen_for_compute(d).select(
+        width.widen(d, "compute").select(
             "source", F.explode(shingles(tokens(F.col("text")), 3)).alias("g")
         )
         .select(

@@ -285,7 +285,7 @@ def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale note (r10 tail sweep): exp 1.05 per decade, 22 s at sf10 — the
     cost is the regex chain itself, linear in bytes (a
-    `widen_for_compute` A/B at sf3/sf10 made it WORSE at sf3 and flat at
+    full-width widen A/B at sf3/sf10 made it WORSE at sf3 and flat at
     sf10: the scan is already wide enough here, and the widen's full-text
     shuffle is pure overhead — kept zero-shuffle on that measurement)."""
     d = read_table(spark, sf_dir, "documents")

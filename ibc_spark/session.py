@@ -52,21 +52,12 @@ def get_spark(
         # catch-up batch OOM'd the 8g heap at sf10; RocksDB finishes it in
         # the same heap). This is the production posture for any stateful
         # stream at 100 TB: state size is bounded by disk, not executor
-        # memory. Override with SPARK_STATESTORE for A/B runs.
+        # memory.
         .config(
             "spark.sql.streaming.stateStore.providerClass",
-            os.environ.get(
-                "SPARK_STATESTORE",
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            ),
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         )
     )
-    # A/B hook: SPARK_GRAFT_EXTRA_CONF="k1=v1,k2=v2" (bench experiments)
-    for pair in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(","):
-        if "=" in pair:
-            k, v = pair.split("=", 1)
-            builder = builder.config(k.strip(), v.strip())
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -1,5 +1,5 @@
 """Cold timing of DataFrame builds: the one policy ``bench.py`` and the
-``scripts/`` sweeps share.
+``scripts/`` sweeps share, plus where each scale factor's data lives.
 
 A sample is the wall time of building a frame and forcing every output
 column through a ``noop`` write (no driver-side result transfer). After
@@ -10,20 +10,37 @@ the next sample starts cold and a long sweep does not accumulate blocks.
 
 from __future__ import annotations
 
+import os
 import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# The untimed warm-up entry: a scan, filter, grouped aggregate and sort
+# over lineitem, so the first timed entry does not pay JVM start-up,
+# first-query planning or first codegen.
+WARM_ENTRY = "q1_pricing_summary"
+
+
+def scale_dir(name: str) -> str:
+    """The data directory of scale factor ``name`` (``"sf0.1"``,
+    ``"sf1"``, ...): the shared test data (TESTDATA.md) when it holds that
+    scale, else this checkout's ``.scale/<name>`` (built by
+    ``scripts/gen_scale_sf.py`` and ``scripts/gen_scale_sfn.py``)."""
+    shared = f"/root/testdata/{name}"
+    return shared if os.path.isdir(shared) else os.path.join(_REPO, ".scale", name)
+
 
 def warm_session(app: str, sf_dir: str) -> SparkSession:
-    """The shared session plus a tiny scan, so JVM start-up and first
-    codegen do not land on the first timed entry."""
-    from ibc_spark.io_.sources import read_table
+    """The shared session after one untimed cold sample of
+    :data:`WARM_ENTRY`."""
+    from ibc_spark.registry import QUERIES
     from ibc_spark.session import get_spark
 
     spark = get_spark(app)
-    read_table(spark, sf_dir, "nation").count()
+    cold_samples(spark, lambda: QUERIES[WARM_ENTRY](spark, sf_dir), 1)
     return spark
 
 

@@ -34,6 +34,8 @@ import sys
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
+from ibc_spark.tools.timing import scale_dir  # noqa: E402
+
 ENTRIES = [
     # banded near-dup family: candidate volume rides the band equi-join
     "dedup_minhash_verified",
@@ -61,16 +63,10 @@ ENTRIES = [
     "sketch_kmv_rollup_merge",
 ]
 
-def _sf_dir(name: str) -> str:
-    driver = f"/root/testdata/{name}"
-    return driver if os.path.isdir(driver) else os.path.join(HERE, ".scale", name)
-
-
-# override with e.g. IBC_SWEEP_SFS=sf0.1,sf1,sf3,sf10 (sf3/sf10 from
-# gen_scale_sfn.py carry documents/embeddings only — sweep text/ANN
-# entries there, not the TPC-H/events families)
+# override with e.g. IBC_SWEEP_SFS=sf0.1,sf1,sf3,sf10 (sf1 from
+# gen_scale_sf.py, sf3/sf10 from gen_scale_sfn.py)
 SFS = [
-    (name, _sf_dir(name))
+    (name, scale_dir(name))
     for name in os.environ.get("IBC_SWEEP_SFS", "sf0.01,sf0.1,sf1").split(",")
 ]
 

@@ -7,17 +7,19 @@ OPERATORS directly (attach → features / FIR resample / VAD, plus the
 streaming twin built inline) with ``head_len=16384`` — a 1 s clip at
 16 kHz — so per-sample decode/filter/segment cost is the signal.
 
-Two axes, fixed 32-core local session per SF:
-- corpus axis: sf0.1 → sf1 (→ sf3 if generated) documents at 16 k
-  samples/doc — exponent should be ~1 (narrow maps).
-- payload axis: sf0.1 documents at head_len 64 → 1024 → 16384 — time
-  should grow far sub-linearly in samples until Python/Arrow overhead is
-  amortized, then linearly.
+Two axes, one session per SF, over the scale factors named in
+``IBC_SWEEP_SFS`` (default ``sf0.1,sf1,sf3``; directories resolved by
+``ibc_spark.tools.timing.scale_dir``, missing ones skipped):
+- corpus axis: every listed SF's documents at 16 k samples/doc —
+  exponent should be ~1 (narrow maps).
+- payload axis: the first listed SF's documents at head_len 64 → 1024
+  → 16384 — time should grow far sub-linearly in samples until
+  Python/Arrow overhead is amortized, then linearly.
 
 Long texts are synthesized in-plan (repeat + substring on the document
 text — deterministic, no new fixtures). Run:
-``python scripts/sweep_audio_payload.py`` → JSON on stdout; save to
-``.scale/sweep_r11_audio_payload.json``.
+``[IBC_SWEEP_SFS=sf0.1,sf1] python scripts/sweep_audio_payload.py`` →
+JSON on stdout.
 """
 
 from __future__ import annotations
@@ -33,11 +35,12 @@ sys.path.insert(0, HERE)
 
 from pyspark.sql import functions as F  # noqa: E402
 
-SF_DIRS = {
-    "sf0.1": "/root/testdata/sf0.1",
-    "sf1": os.path.join(HERE, ".scale", "sf1"),
-    "sf3": os.path.join(HERE, ".scale", "sf3"),
-}
+from ibc_spark.tools.timing import scale_dir  # noqa: E402
+
+SFS = [
+    (name, scale_dir(name))
+    for name in os.environ.get("IBC_SWEEP_SFS", "sf0.1,sf1,sf3").split(",")
+]
 
 
 def _docs_with_long_text(spark, sf_dir: str, head_len: int):
@@ -86,12 +89,15 @@ def main() -> None:
 
     results: dict[str, dict[str, float]] = {}
 
+    sfs = []
+    for sf_name, sf_dir in SFS:
+        if os.path.isdir(sf_dir):
+            sfs.append((sf_name, sf_dir))
+        else:
+            print(f"skip {sf_name}: {sf_dir} missing", file=sys.stderr)
+
     # ---- corpus axis at 16 k samples ----
-    for sf_name in ("sf0.1", "sf1", "sf3"):
-        sf_dir = SF_DIRS[sf_name]
-        if not os.path.isdir(sf_dir):
-            print(f"skip {sf_name}", file=sys.stderr)
-            continue
+    for sf_name, sf_dir in sfs:
         spark = get_spark(f"audio_sweep_{sf_name}")
         docs = _docs_with_long_text(spark, sf_dir, 16384)
         for name, pipe in _pipelines(16384).items():
@@ -100,14 +106,15 @@ def main() -> None:
             print(f"{sf_name}@16k {name}: {med:.2f}s", file=sys.stderr)
         spark.stop()
 
-    # ---- payload axis at sf0.1 ----
+    # ---- payload axis at the first SF ----
+    base_name, base_dir = sfs[0]
     spark = get_spark("audio_sweep_payload")
     for head_len in (64, 1024, 16384):
-        docs = _docs_with_long_text(spark, SF_DIRS["sf0.1"], head_len)
+        docs = _docs_with_long_text(spark, base_dir, head_len)
         for name, pipe in _pipelines(head_len).items():
             med = median(cold_samples(spark, lambda: pipe(docs), runs))
-            results.setdefault(name, {})[f"sf0.1@{head_len}"] = round(med, 3)
-            print(f"sf0.1@{head_len} {name}: {med:.2f}s", file=sys.stderr)
+            results.setdefault(name, {})[f"{base_name}@{head_len}"] = round(med, 3)
+            print(f"{base_name}@{head_len} {name}: {med:.2f}s", file=sys.stderr)
     spark.stop()
 
     # ---- streaming twin, corpus axis (one SF per session — RocksDB
@@ -117,10 +124,7 @@ def main() -> None:
     from ibc_spark.registry_extras import _run_stream_to_memory
     from ibc_spark.streaming.sources import read_documents_stream
 
-    for sf_name in ("sf0.1", "sf1"):
-        sf_dir = SF_DIRS[sf_name]
-        if not os.path.isdir(sf_dir):
-            continue
+    for sf_name, sf_dir in sfs:
         # memory-sink query names must be single-part (no dots)
         safe = sf_name.replace(".", "")
         spark = get_spark(f"audio_sweep_stream_{safe}")
@@ -150,13 +154,13 @@ def main() -> None:
         spark.stop()
 
     for name, r in results.items():
-        a, b = r.get("sf0.1@16k"), r.get("sf1@16k")
-        if a and b:
-            r["exp_01_to_1@16k"] = round(math.log10(b / a), 2)
-        b3 = r.get("sf3@16k")
-        if b and b3:
-            r["exp_1_to_3@16k"] = round(math.log10(b3 / b) / math.log10(3.0), 2)
-        p64, p16k = r.get("sf0.1@64"), r.get("sf0.1@16384")
+        # per-decade exponent between consecutive SFs
+        for (lo, _), (hi, _) in zip(sfs, sfs[1:]):
+            a, b = r.get(f"{lo}@16k"), r.get(f"{hi}@16k")
+            if a and b:
+                decades = math.log10(float(hi[2:]) / float(lo[2:]))
+                r[f"exp_{lo}_to_{hi}@16k"] = round(math.log10(b / a) / decades, 2)
+        p64, p16k = r.get(f"{base_name}@64"), r.get(f"{base_name}@16384")
         if p64 and p16k:
             # per-256x-samples decade-normalized growth
             r["exp_payload_64_to_16k"] = round(

@@ -9,9 +9,9 @@ it, plan growth makes iteration k cost O(k)) — and (b) the size of the
 trained segmentation table, to document where the APPLY join's broadcast
 assumption breaks (spark.sql.autoBroadcastJoinThreshold default 10 MB).
 
-Run: ``python scripts/sweep_bpe_merges.py [steps ...]`` (default
-3 10 30 100 300) → JSON on stdout; save to
-``.scale/sweep_r11_bpe_merges.json``.
+Run: ``[SPARK_GRAFT_SF_DIR=<sf dir>] python scripts/sweep_bpe_merges.py
+[steps ...]`` (default sf1 from ``gen_scale_sf.py``; steps 3 10 30 100
+300) → JSON on stdout.
 """
 
 from __future__ import annotations
@@ -25,7 +25,9 @@ sys.path.insert(0, HERE)
 
 from pyspark.sql import functions as F  # noqa: E402
 
-SF_DIR = os.environ.get("IBC_BPE_SF_DIR", os.path.join(HERE, ".scale", "sf1"))
+from ibc_spark.tools.timing import scale_dir  # noqa: E402
+
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR") or scale_dir("sf1")
 
 
 def main() -> None:
