@@ -8,10 +8,7 @@ SQL-expressible entry. The driver hash-compares the two at sf0.01.
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 import sys
 from collections.abc import Callable
 
@@ -21,24 +18,9 @@ _HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _HERE)
 
 from ibc_spark.registry import ORACLES, QUERIES  # noqa: E402
-
-
-def _last_green_round() -> dict[str, int]:
-    """Map query name → the LATEST round whose CORRECTNESS_r*.json carries a
-    green row for it."""
-    seen: dict[str, int] = {}
-    for path in glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if isinstance(row, dict) and (row.get("hash_match") or row.get("rows_match")):
-                seen[name] = max(seen.get(name, 0), rnd)
-    return seen
+from ibc_spark.tools.entry_manifest import (  # noqa: E402
+    _last_green_rounds as _last_green_round,
+)
 
 
 # Rotation: the driver hash-checks only the first 50 entries of

@@ -1151,7 +1151,48 @@ def resize_nearest(arr, *, width: int, height: int):
     return a[rows][:, cols].copy()
 
 
-def image_channel_stats(df: DataFrame, *, payload_col: str = "payload") -> DataFrame:
+# output of the payload-to-payload kernels (resample, transcode)
+PAYLOAD_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("payload", T.BinaryType()),
+    ]
+)
+
+
+def _map_payloads(df: DataFrame, schema: T.StructType, rows, decode=list) -> DataFrame:
+    """One Arrow-batched ``mapInPandas`` stage over ``df``'s ``(doc_id,
+    payload)`` columns — only the two the kernels read cross the Python
+    boundary (``media_meta`` from the attach stages would ship for
+    nothing). ``decode`` maps one batch's payload list to one item per
+    row: the payload bytes themselves by default, or a batch decoder's
+    per-row result, where a row that failed carries its exception.
+    ``rows(item)`` yields the non-id values of each output row of
+    ``schema``. A row whose item is an exception, or whose ``rows``
+    raises, gets one all-NULL row after whatever rows it already yielded
+    (errors-as-data: an undecodable payload never fails the task)."""
+    names = schema.fieldNames()
+    nulls = (None,) * (len(names) - 1)
+
+    def _map(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
+        import pandas as pd
+
+        for pdf in batches:
+            out = []
+            for doc_id, item in zip(pdf["doc_id"], decode(list(pdf["payload"]))):
+                try:
+                    if isinstance(item, Exception):
+                        raise item
+                    for vals in rows(item):
+                        out.append((doc_id, *vals))
+                except Exception:
+                    out.append((doc_id, *nulls))
+            yield pd.DataFrame(out, columns=names)
+
+    return df.select("doc_id", "payload").mapInPandas(_map, schema)
+
+
+def image_channel_stats(df: DataFrame) -> DataFrame:
     """REAL decode pipeline over the binary column: parse each payload with
     :func:`decode_image` and emit (doc_id, width, height, per-channel mean)
     — Arrow-batched ``mapInPandas``, the exact production shape with the
@@ -1168,25 +1209,12 @@ def image_channel_stats(df: DataFrame, *, payload_col: str = "payload") -> DataF
         ]
     )
 
-    def _stats(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    def rows(payload):
+        img = decode_image(payload)
+        m = img.reshape(-1, 3).mean(axis=0)
+        yield img.shape[1], img.shape[0], float(m[0]), float(m[1]), float(m[2])
 
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                try:
-                    img = decode_image(bytes(payload))
-                    m = img.reshape(-1, 3).mean(axis=0)
-                    out.append(
-                        (doc_id, img.shape[1], img.shape[0], float(m[0]), float(m[1]), float(m[2]))
-                    )
-                except Exception:  # undecodable → NULL row, never a failed task
-                    out.append((doc_id, None, None, None, None, None))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "width", "height", "mean_r", "mean_g", "mean_b"]
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(_stats, schema)
+    return _map_payloads(df, schema, rows)
 
 
 def extract_features(df: DataFrame, *, dim: int = 8) -> DataFrame:
@@ -2115,315 +2143,167 @@ def decode_audio(payload: bytes):
     )
 
 
-def attach_audio(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sample_rate: int = 16000,
-    head_len: int = 64,
-    channels: int = 1,
-) -> DataFrame:
-    """Attach a REAL WAV payload per row: a deterministic synthetic int16
-    waveform derived from the CODEPOINTS of the text head
+MEDIA_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("payload", T.BinaryType()),
+        T.StructField(
+            "media_meta",
+            T.StructType(
+                [
+                    T.StructField("mime", T.StringType()),
+                    T.StructField("n_bytes", T.LongType()),
+                    T.StructField("codec", T.StringType()),
+                ]
+            ),
+        ),
+    ]
+)
+
+
+def _attach_payloads(docs: DataFrame, head_len: int, mime: str, codec: str, encode) -> DataFrame:
+    """Attach a synthetic media payload per row of ``docs``: ``encode(cp)``
+    maps the int64 codepoints of the first ``head_len`` characters of
+    ``text`` to the payload bytes, and ``media_meta`` records ``mime``,
+    the payload length and ``codec``. Codepoints, not UTF-8 bytes, so
+    SQL ``ascii(substring(text, i, 1))`` re-derives every input on any
+    Unicode text. Runs as one Arrow-batched ``mapInPandas`` (payload
+    synthesis is per-char work, the slot a binary-file scan occupies at
+    100 TB)."""
+    # cast the id at plan time so a non-long id column fails (or coerces)
+    # here, not inside the Arrow stage at runtime
+    src = docs.select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.substring(F.col("text"), 1, head_len).alias("head"),
+    )
+
+    def _attach(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
+        import numpy as np
+        import pandas as pd
+
+        for pdf in batches:
+            # utf-32-le gives the codepoint array without a per-char
+            # Python loop (ord() over 16 k chars dominated the
+            # realistic-payload sweep)
+            payloads = [
+                encode(
+                    np.frombuffer((head or "").encode("utf-32-le"), dtype="<u4").astype(
+                        np.int64
+                    )
+                )
+                for head in pdf["head"]
+            ]
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "payload": payloads,
+                    "media_meta": [
+                        {"mime": mime, "n_bytes": len(p), "codec": codec}
+                        for p in payloads
+                    ],
+                }
+            )
+
+    return src.mapInPandas(_attach, MEDIA_SCHEMA)
+
+
+def attach_audio(docs: DataFrame, *, head_len: int = 64, channels: int = 1) -> DataFrame:
+    """Attach a REAL 16 kHz WAV payload per row: a deterministic synthetic
+    int16 waveform derived from the codepoints of the text head
     (``s_{i,c} = ((cp_i*37 + i*11 + c*53) % 256 - 128) * 256``, i 0-based
-    frame, c 0-based channel — codepoints, not UTF-8 bytes, so SQL
-    ``ascii(substring(head, i, 1))`` reproduces it on any Unicode text),
-    interleaved frame-major and encoded through :func:`encode_wav`. The
-    default ``channels=1`` payload is bit-identical to the pre-r12 mono
-    formula (the ``c*53`` term vanishes at c=0); ``channels=2`` gives the
-    stereo corpus the multichannel DSP entries attest on — channel 1 is a
-    deterministic, DIFFERENT waveform over the same text, so a kernel
-    that mixed channels would hash-mismatch. Every engine can reproduce
-    the waveform from the text, so downstream REAL decodes are
-    hash-checkable. ``head_len`` bounds the waveform length: registry
-    entries pin the oracle-matched 64; the payload-size sweeps use 16384
-    (a 1 s clip at 16 kHz) so Arrow overhead doesn't mask per-sample
-    cost. Runs as an Arrow-batched ``mapInPandas`` (payload synthesis is
-    per-char work, same slot a binary-file scan occupies at 100 TB)."""
+    frame, c 0-based channel), interleaved frame-major and encoded
+    through :func:`encode_wav`. The default ``channels=1`` payload is the
+    mono formula ``((cp_i*37 + i*11) % 256 - 128) * 256`` (the ``c*53``
+    term vanishes at c=0); ``channels=2`` gives the stereo corpus the multichannel DSP entries
+    attest on — channel 1 is a deterministic, DIFFERENT waveform over the
+    same text, so a kernel that mixed channels would hash-mismatch. Every
+    engine can reproduce the waveform from the text, so downstream REAL
+    decodes are hash-checkable. ``head_len`` bounds the waveform length:
+    registry entries pin the oracle-matched 64; the payload-size sweeps
+    use 16384 (a 1 s clip at 16 kHz) so Arrow overhead doesn't mask
+    per-sample cost."""
+    import numpy as np
+
     if channels < 1:
         raise ValueError("channels must be >= 1")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField(
-                "media_meta",
-                T.StructType(
-                    [
-                        T.StructField("mime", T.StringType()),
-                        T.StructField("n_bytes", T.LongType()),
-                        T.StructField("codec", T.StringType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-    # cast the id at plan time so a non-long id column fails (or coerces)
-    # here, not inside the Arrow stage at runtime (ADVICE r10)
-    src = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.substring(F.col(text_col), 1, head_len).alias("head"),
-    )
 
-    def _attach(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import numpy as np
-        import pandas as pd
+    def encode(cp):
+        mix = cp * 37 + np.arange(len(cp), dtype=np.int64) * 11
+        if channels > 1:
+            # (frames, ch) → interleave frame-major via reshape
+            mix = mix[:, None] + np.arange(channels, dtype=np.int64) * 53
+        samples = ((mix % 256) - 128) * 256
+        return encode_wav(samples.reshape(-1).astype(np.int16), channels=channels)
 
-        for pdf in batches:
-            payloads = []
-            for head in pdf["head"]:
-                # utf-32-le gives the codepoint array without a per-char
-                # Python loop (ord() over 16 k chars dominated the
-                # realistic-payload sweep)
-                b = np.frombuffer((head or "").encode("utf-32-le"), dtype="<u4").astype(
-                    np.int64
-                )
-                idx = np.arange(len(b), dtype=np.int64)
-                mix = b * 37 + idx * 11
-                if channels > 1:
-                    # (frames, ch) → interleave frame-major via reshape
-                    mix = mix[:, None] + np.arange(channels, dtype=np.int64) * 53
-                samples = ((mix % 256) - 128) * 256
-                payloads.append(
-                    encode_wav(
-                        samples.reshape(-1).astype(np.int16),
-                        sample_rate=sample_rate,
-                        channels=channels,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "media_meta": [
-                        {"mime": "audio/wav", "n_bytes": len(p), "codec": "pcm_s16le"}
-                        for p in payloads
-                    ],
-                }
-            )
-
-    return src.mapInPandas(_attach, schema)
+    return _attach_payloads(docs, head_len, "audio/wav", "pcm_s16le", encode)
 
 
-def attach_video(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    fps: int = 10,
-    head_len: int = 16,
-    height: int = 4,
-    width: int = 4,
-) -> DataFrame:
+def attach_video(docs: DataFrame) -> DataFrame:
     """Attach a REAL AVI payload per row: one 4×4 RGB frame per codepoint
-    of the text head, pixel ``(t,y,x,c) = (cp_t·7 + y·13 + x·17 + c·29 +
-    (t-1)·3) % 256`` (t 1-based frame, codepoints not UTF-8 bytes — SQL
-    ``ascii(substring(head, t, 1))`` reproduces it), encoded through
-    :func:`encode_avi_raw`. Every engine can re-derive each pixel from
-    the text, so downstream REAL decodes are hash-checkable — the video
-    twin of :func:`attach_audio`. Arrow-batched ``mapInPandas``."""
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField(
-                "media_meta",
-                T.StructType(
-                    [
-                        T.StructField("mime", T.StringType()),
-                        T.StructField("n_bytes", T.LongType()),
-                        T.StructField("codec", T.StringType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-    src = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.substring(F.col(text_col), 1, head_len).alias("head"),
-    )
+    of the first 16 characters of the text, pixel ``(t,y,x,c) = (cp_t·7 +
+    y·13 + x·17 + c·29 + (t-1)·3) % 256`` (t 1-based frame), encoded at
+    10 fps through :func:`encode_avi_raw`. Every engine can re-derive
+    each pixel from the text, so downstream REAL decodes are
+    hash-checkable — the video twin of :func:`attach_audio`."""
+    import numpy as np
 
-    def _attach(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import numpy as np
-        import pandas as pd
+    y, x, c = np.ogrid[:4, :4, :3]
+    base = y * 13 + x * 17 + c * 29
 
-        y = np.arange(height, dtype=np.int64)[:, None, None]
-        x = np.arange(width, dtype=np.int64)[None, :, None]
-        c = np.arange(3, dtype=np.int64)[None, None, :]
-        base = y * 13 + x * 17 + c * 29
-        for pdf in batches:
-            payloads = []
-            for head in pdf["head"]:
-                cp = np.frombuffer(
-                    (head or "").encode("utf-32-le"), dtype="<u4"
-                ).astype(np.int64)
-                t = np.arange(len(cp), dtype=np.int64)  # 0-based (t-1)
-                frames = (
-                    (cp * 7 + t * 3)[:, None, None, None] + base[None]
-                ) % 256
-                payloads.append(encode_avi_raw(frames.astype(np.uint8), fps=fps))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "media_meta": [
-                        {"mime": "video/x-msvideo", "n_bytes": len(p), "codec": "rawvideo"}
-                        for p in payloads
-                    ],
-                }
-            )
+    def encode(cp):
+        t = np.arange(len(cp), dtype=np.int64)  # 0-based (t-1)
+        frames = ((cp * 7 + t * 3)[:, None, None, None] + base[None]) % 256
+        return encode_avi_raw(frames.astype(np.uint8))
 
-    return src.mapInPandas(_attach, schema)
+    return _attach_payloads(docs, 16, "video/x-msvideo", "rawvideo", encode)
 
 
-def attach_video_rle(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    fps: int = 10,
-    head_len: int = 16,
-    height: int = 8,
-    width: int = 8,
-) -> DataFrame:
-    """Attach a REAL MS-RLE8-compressed AVI payload per row (r14): one
-    8×8 palette-index frame per codepoint of the text head, index
-    ``(t,y,x) = (cp_t·3 + (t-1)·11 + y·5 + x//4) % 256`` (x//4 gives
-    4-pixel runs so the run-length coder has real runs to compress),
-    palette :func:`default_rle_palette`, encoded through
-    :func:`encode_avi_rle8`. Every decoded pixel is re-derivable from
-    the text in SQL, so the full compressed-container loop is
-    hash-checkable. Arrow-batched ``mapInPandas``."""
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField(
-                "media_meta",
-                T.StructType(
-                    [
-                        T.StructField("mime", T.StringType()),
-                        T.StructField("n_bytes", T.LongType()),
-                        T.StructField("codec", T.StringType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-    src = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.substring(F.col(text_col), 1, head_len).alias("head"),
-    )
+def attach_video_rle(docs: DataFrame) -> DataFrame:
+    """Attach a REAL MS-RLE8-compressed AVI payload per row: one 8×8
+    palette-index frame per codepoint of the first 16 characters of the
+    text, index ``(t,y,x) = (cp_t·3 + (t-1)·11 + y·5 + x//4) % 256``
+    (x//4 gives 4-pixel runs so the run-length coder has real runs to
+    compress), palette :func:`default_rle_palette`, encoded at 10 fps
+    through :func:`encode_avi_rle8`. Every decoded pixel is re-derivable
+    from the text in SQL, so the full compressed-container loop is
+    hash-checkable."""
+    import numpy as np
 
-    def _attach(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import numpy as np
-        import pandas as pd
+    pal = default_rle_palette()
+    y, x = np.ogrid[:8, :8]
+    base = y * 5 + x // 4
 
-        pal = default_rle_palette()
-        y = np.arange(height, dtype=np.int64)[:, None]
-        x = np.arange(width, dtype=np.int64)[None, :]
-        base = y * 5 + x // 4
-        for pdf in batches:
-            payloads = []
-            for head in pdf["head"]:
-                cp = np.frombuffer(
-                    (head or "").encode("utf-32-le"), dtype="<u4"
-                ).astype(np.int64)
-                t = np.arange(len(cp), dtype=np.int64)  # 0-based (t-1)
-                frames = ((cp * 3 + t * 11)[:, None, None] + base[None]) % 256
-                payloads.append(encode_avi_rle8(frames.astype(np.uint8), pal, fps=fps))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "media_meta": [
-                        {"mime": "video/x-msvideo", "n_bytes": len(p), "codec": "msrle"}
-                        for p in payloads
-                    ],
-                }
-            )
+    def encode(cp):
+        t = np.arange(len(cp), dtype=np.int64)  # 0-based (t-1)
+        frames = ((cp * 3 + t * 11)[:, None, None] + base[None]) % 256
+        return encode_avi_rle8(frames.astype(np.uint8), pal)
 
-    return src.mapInPandas(_attach, schema)
+    return _attach_payloads(docs, 16, "video/x-msvideo", "msrle", encode)
 
 
-def attach_video_mjpeg(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    fps: int = 10,
-    head_len: int = 16,
-) -> DataFrame:
-    """Attach a REAL motion-JPEG AVI payload per row (r14): one 16×16
-    frame per codepoint of the text head — exactly one 4:2:0 MCU, flat
-    color ``(cp_t·7 + (t-1)·3, cp_t·11 + (t-1)·5, cp_t·13 + (t-1)·7)
-    % 256`` — encoded with all-ones quantization tables through
-    :func:`encode_avi_mjpeg`, so every decoded pixel is the pinned-order
-    YCbCr round trip of a value any engine can re-derive from the text
-    (the flat-MCU exactness contract in ``ext/jpegcodec.py``).
-    Arrow-batched ``mapInPandas``."""
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField(
-                "media_meta",
-                T.StructType(
-                    [
-                        T.StructField("mime", T.StringType()),
-                        T.StructField("n_bytes", T.LongType()),
-                        T.StructField("codec", T.StringType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-    src = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.substring(F.col(text_col), 1, head_len).alias("head"),
-    )
+def attach_video_mjpeg(docs: DataFrame) -> DataFrame:
+    """Attach a REAL motion-JPEG AVI payload per row: one 16×16 frame per
+    codepoint of the first 16 characters of the text — exactly one 4:2:0
+    MCU, flat color ``(cp_t·7 + (t-1)·3, cp_t·11 + (t-1)·5, cp_t·13 +
+    (t-1)·7) % 256`` — encoded at 10 fps with all-ones quantization
+    tables through :func:`encode_avi_mjpeg`, so every decoded pixel is
+    the pinned-order YCbCr round trip of a value any engine can re-derive
+    from the text (the flat-MCU exactness contract in
+    ``ext/jpegcodec.py``)."""
+    import numpy as np
 
-    def _attach(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import numpy as np
-        import pandas as pd
+    ones = [1] * 64
 
-        ones = [1] * 64
-        for pdf in batches:
-            payloads = []
-            for head in pdf["head"]:
-                cp = np.frombuffer(
-                    (head or "").encode("utf-32-le"), dtype="<u4"
-                ).astype(np.int64)
-                t = np.arange(len(cp), dtype=np.int64)  # 0-based (t-1)
-                colors = np.stack(
-                    [
-                        (cp * 7 + t * 3) % 256,
-                        (cp * 11 + t * 5) % 256,
-                        (cp * 13 + t * 7) % 256,
-                    ],
-                    axis=1,
-                ).astype(np.uint8)
-                frames = np.repeat(
-                    np.repeat(colors[:, None, None, :], 16, axis=1), 16, axis=2
-                )
-                payloads.append(
-                    encode_avi_mjpeg(
-                        frames, fps=fps, quant_luma=ones, quant_chroma=ones
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "media_meta": [
-                        {"mime": "video/x-msvideo", "n_bytes": len(p), "codec": "mjpeg"}
-                        for p in payloads
-                    ],
-                }
-            )
+    def encode(cp):
+        t = np.arange(len(cp), dtype=np.int64)  # 0-based (t-1)
+        colors = np.stack(
+            [(cp * 7 + t * 3) % 256, (cp * 11 + t * 5) % 256, (cp * 13 + t * 7) % 256],
+            axis=1,
+        ).astype(np.uint8)
+        frames = np.repeat(np.repeat(colors[:, None, None, :], 16, axis=1), 16, axis=2)
+        return encode_avi_mjpeg(frames, quant_luma=ones, quant_chroma=ones)
 
-    return src.mapInPandas(_attach, schema)
+    return _attach_payloads(docs, 16, "video/x-msvideo", "mjpeg", encode)
 
 
 VIDEO_FRAME_SCHEMA = T.StructType(
@@ -2440,7 +2320,7 @@ VIDEO_FRAME_SCHEMA = T.StructType(
 )
 
 
-def video_frame_features(df: DataFrame, *, payload_col: str = "payload") -> DataFrame:
+def video_frame_features(df: DataFrame) -> DataFrame:
     """REAL decode pipeline over the video binary column: parse each AVI
     with :func:`decode_avi` and emit one row per frame with integer
     stats — pixel sum, max, and a POSITION-WEIGHTED checksum
@@ -2448,42 +2328,25 @@ def video_frame_features(df: DataFrame, *, payload_col: str = "payload") -> Data
     or stride mis-padding in the container loop would change. 1:N
     ``mapInPandas`` fan-out, narrow map; undecodable payloads → NULL
     row (errors-as-data)."""
+    import numpy as np
 
-    def _feat(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                try:
-                    fps, frames = decode_avi(bytes(payload))
-                    n, h, w = frames.shape[:3]
-                    weights = np.arange(1, h * w * 3 + 1, dtype=np.int64)
-                    # explicit shape: reshape(n, -1) raises on n == 0 (numpy
-                    # cannot infer -1 from a size-0 array), and a 0-frame
-                    # video is a decodable payload, not an error row
-                    flat = frames.reshape(n, h * w * 3).astype(np.int64)
-                    for i in range(n):
-                        out.append(
-                            (
-                                doc_id, i, fps, h, w,
-                                int(flat[i].sum()),
-                                int(flat[i].max()),
-                                int((flat[i] * weights).sum()),
-                            )
-                        )
-                except Exception:
-                    out.append((doc_id, None, None, None, None, None, None, None))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "frame_idx", "fps", "height", "width",
-                    "sum_pix", "max_pix", "checksum",
-                ],
+    def rows(payload):
+        fps, frames = decode_avi(payload)
+        n, h, w = frames.shape[:3]
+        weights = np.arange(1, h * w * 3 + 1, dtype=np.int64)
+        # explicit shape: reshape(n, -1) raises on n == 0 (numpy cannot
+        # infer -1 from a size-0 array), and a 0-frame video is a
+        # decodable payload, not an error row
+        flat = frames.reshape(n, h * w * 3).astype(np.int64)
+        for i in range(n):
+            yield (
+                i, fps, h, w,
+                int(flat[i].sum()),
+                int(flat[i].max()),
+                int((flat[i] * weights).sum()),
             )
 
-    return df.select("doc_id", payload_col).mapInPandas(_feat, VIDEO_FRAME_SCHEMA)
+    return _map_payloads(df, VIDEO_FRAME_SCHEMA, rows)
 
 
 # Scene-cut threshold: L1 frame difference at which a transition counts
@@ -2493,20 +2356,18 @@ def video_frame_features(df: DataFrame, *, payload_col: str = "payload") -> Data
 SCENE_CUT_L1_THRESHOLD = 3200
 
 
-def scene_cut_frames(
-    df: DataFrame,
-    *,
-    payload_col: str = "payload",
-    threshold: int = SCENE_CUT_L1_THRESHOLD,
-) -> DataFrame:
+def scene_cut_frames(df: DataFrame) -> DataFrame:
     """Shot-boundary detection over the video binary column — the classic
     video-corpus preprocessing screen (keyframe selection / clip
     segmentation for training pipelines): REAL AVI decode, per-frame L1
-    distance to the previous frame, ``is_cut = l1 >= threshold``. Emits
-    one row per frame TRANSITION (frame_idx ≥ 1); 0/1-frame videos emit
-    nothing. Integer arithmetic end to end so the decisions are
-    SQL-replayable. 1:N ``mapInPandas`` fan-out, narrow map;
-    undecodable payloads → NULL row (errors-as-data)."""
+    distance to the previous frame, ``is_cut = l1 >=
+    SCENE_CUT_L1_THRESHOLD``. Emits one row per frame TRANSITION
+    (frame_idx ≥ 1); 0/1-frame videos emit nothing. Integer arithmetic
+    end to end so the decisions are SQL-replayable. 1:N ``mapInPandas``
+    fan-out, narrow map; undecodable payloads → NULL row
+    (errors-as-data)."""
+    import numpy as np
+
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -2516,26 +2377,14 @@ def scene_cut_frames(
         ]
     )
 
-    def _cuts(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import numpy as np
-        import pandas as pd
+    def rows(payload):
+        _fps, frames = decode_avi(payload)
+        f = frames.astype(np.int64)
+        diffs = np.abs(f[1:] - f[:-1]).reshape(max(len(f) - 1, 0), -1).sum(axis=1) if len(f) > 1 else np.zeros(0, np.int64)
+        for i, d in enumerate(diffs, start=1):
+            yield i, int(d), bool(d >= SCENE_CUT_L1_THRESHOLD)
 
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                try:
-                    _fps, frames = decode_avi(bytes(payload))
-                    f = frames.astype(np.int64)
-                    diffs = np.abs(f[1:] - f[:-1]).reshape(max(len(f) - 1, 0), -1).sum(axis=1) if len(f) > 1 else np.zeros(0, np.int64)
-                    for i, d in enumerate(diffs, start=1):
-                        out.append((doc_id, i, int(d), bool(d >= threshold)))
-                except Exception:
-                    out.append((doc_id, None, None, None))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "frame_idx", "l1_diff", "is_cut"]
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(_cuts, schema)
+    return _map_payloads(df, schema, rows)
 
 
 AUDIO_FEATURE_SCHEMA = T.StructType(
@@ -2551,59 +2400,38 @@ AUDIO_FEATURE_SCHEMA = T.StructType(
 )
 
 
-def audio_features(df: DataFrame, *, payload_col: str = "payload") -> DataFrame:
+def audio_features(df: DataFrame) -> DataFrame:
     """REAL decode pipeline over the audio binary column: parse each WAV
     with :func:`decode_audio` and emit integer waveform features
     (duration, peak amplitude, total magnitude, zero-crossing count — the
     classic VAD/energy screen). Channel-aware: ``n_samples``/``duration_ms``
     count FRAMES (not interleaved samples) and zero-crossings are counted
     per channel after de-interleaving, never across L/R boundaries.
-    Arrow-batched ``mapInPandas``, narrow map, no shuffle; undecodable
-    payloads yield a NULL row (errors-as-data)."""
+    Arrow-batched ``mapInPandas``, narrow map, no shuffle; payloads decode
+    a whole batch at a time through :func:`decode_audio_batch` (ADPCM
+    rows run the vectorized block kernel), and undecodable payloads yield
+    a NULL row (errors-as-data)."""
+    import numpy as np
 
-    def _feat(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import numpy as np
-        import pandas as pd
+    def rows(dec):
+        rate, ch, s = dec
+        if rate > 0x7FFFFFFF:
+            # the fmt field is uint32 but the feature column is int32 —
+            # route the overflow to the NULL row instead of failing the
+            # whole Arrow batch
+            raise ValueError("sample_rate exceeds int32")
+        planes = s.astype(np.int64).reshape(-1, ch)  # (frames, ch)
+        absd = np.abs(planes)
+        yield (
+            rate,
+            planes.shape[0],
+            planes.shape[0] * 1000 // rate,
+            int(absd.max()) if planes.size else 0,
+            int(absd.sum()),
+            int(np.count_nonzero(planes[1:] * planes[:-1] < 0)),
+        )
 
-        cols = [f.name for f in AUDIO_FEATURE_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            # batched decode (r15): ADPCM rows run the vectorized block
-            # kernel across the whole Arrow batch; per-row errors stay
-            # per-row (errors-as-data)
-            decoded = decode_audio_batch(list(pdf[payload_col]))
-            for doc_id, dec in zip(pdf["doc_id"], decoded):
-                try:
-                    if isinstance(dec, Exception):
-                        raise dec
-                    rate, ch, s = dec
-                    if rate > 0x7FFFFFFF:
-                        # the fmt field is uint32 but the feature column is
-                        # int32 — route the overflow to the NULL row instead
-                        # of failing the whole Arrow batch (review, r10)
-                        raise ValueError("sample_rate exceeds int32")
-                    planes = s.astype(np.int64).reshape(-1, ch)  # (frames, ch)
-                    absd = np.abs(planes)
-                    zc = int(np.count_nonzero(planes[1:] * planes[:-1] < 0))
-                    out.append(
-                        (
-                            doc_id,
-                            rate,
-                            planes.shape[0],
-                            planes.shape[0] * 1000 // rate,
-                            int(absd.max()) if planes.size else 0,
-                            int(absd.sum()),
-                            zc,
-                        )
-                    )
-                except Exception:  # undecodable → NULL row, never a failed task
-                    out.append((doc_id, None, None, None, None, None, None))
-            yield pd.DataFrame(out, columns=cols)
-
-    # pass only the two columns the kernel reads across the Python
-    # boundary (media_meta from attach_* stages otherwise ships for
-    # nothing — guide §4.1)
-    return df.select("doc_id", payload_col).mapInPandas(_feat, AUDIO_FEATURE_SCHEMA)
+    return _map_payloads(df, AUDIO_FEATURE_SCHEMA, rows, decode_audio_batch)
 
 
 # Anti-alias FIR for integer-factor decimation: windowed-sinc low-pass,
@@ -2654,72 +2482,46 @@ def fir_lowpass_int(samples, taps) -> "np.ndarray":  # noqa: F821
     return np.clip(y, -32768, 32767).astype(np.int16)
 
 
-def resample_audio(
-    df: DataFrame, *, factor: int, payload_col: str = "payload", antialias: bool = True
-) -> DataFrame:
+def resample_audio(df: DataFrame, *, factor: int, antialias: bool = True) -> DataFrame:
     """Integer-factor resampler over the audio column: REAL decode →
     anti-alias low-pass (:func:`fir_lowpass_int`, integer windowed-sinc
     FIR cut at the new Nyquist — no aliased energy folds into the output
     band) → keep every ``factor``-th frame → REAL re-encode at
-    ``rate // factor``. Channel-aware (r12 — the mono-only seam named by
-    the r11 verdict closed): frames deinterleave, the SAME integer FIR
-    filters each channel independently (never across L/R boundaries),
-    decimation drops whole FRAMES, and the surviving frames reinterleave
-    — so mono payloads are bit-unchanged and stereo is oracled with one
-    extra channel index in the SQL join. Because the filter is
-    integer-exact, the full decode→filter→decimate→encode loop is
-    hash-checked against a SQL oracle that replays the convolution as a
-    bounded-lag self-join. ``antialias=False`` gives plain index
-    decimation (the pre-r11 behavior, kept for tests/diagnostics). 1:1
-    ``mapInPandas``, narrow map. A payload whose rate is below ``factor``
-    (so the target rate would be 0 Hz) is rejected → NULL row, never
-    emitted at a fabricated rate (ADVICE r10)."""
+    ``rate // factor``. Channel-aware: frames deinterleave, the SAME
+    integer FIR filters each channel independently (never across L/R
+    boundaries), decimation drops whole FRAMES, and the surviving frames
+    reinterleave — so mono payloads are bit-unchanged and stereo is
+    oracled with one extra channel index in the SQL join. Because the
+    filter is integer-exact, the full decode→filter→decimate→encode loop
+    is hash-checked against a SQL oracle that replays the convolution as
+    a bounded-lag self-join. ``antialias=False`` gives plain index
+    decimation (kept as the tests' reference arm). 1:1 ``mapInPandas``,
+    narrow map. A payload whose rate is below ``factor`` (so the target
+    rate would be 0 Hz) is rejected → NULL row, never emitted at a
+    fabricated rate."""
+    import numpy as np
+
     if factor < 1:
         raise ValueError("factor must be >= 1")
     taps = fir_decimation_taps(factor) if antialias and factor > 1 else None
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
 
-    def _res(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import numpy as np
-        import pandas as pd
+    def rows(payload):
+        rate, ch, s = decode_audio(payload)
+        if rate // factor == 0:
+            raise ValueError("decimation factor exceeds sample rate")
+        planes = s.reshape(-1, ch)  # (frames, ch)
+        if taps is not None:
+            planes = np.stack(
+                [fir_lowpass_int(planes[:, c], taps) for c in range(ch)], axis=1
+            )
+        dec = planes[::factor]  # every factor-th FRAME
+        yield (
+            encode_wav(
+                dec.reshape(-1).astype(np.int16), sample_rate=rate // factor, channels=ch
+            ),
+        )
 
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                try:
-                    rate, ch, s = decode_audio(bytes(payload))
-                    if rate // factor == 0:
-                        raise ValueError("decimation factor exceeds sample rate")
-                    planes = s.reshape(-1, ch)  # (frames, ch)
-                    if taps is not None:
-                        planes = np.stack(
-                            [
-                                fir_lowpass_int(planes[:, c], taps)
-                                for c in range(ch)
-                            ],
-                            axis=1,
-                        )
-                    dec = planes[::factor]  # every factor-th FRAME
-                    out.append(
-                        (
-                            doc_id,
-                            encode_wav(
-                                dec.reshape(-1).astype(np.int16),
-                                sample_rate=rate // factor,
-                                channels=ch,
-                            ),
-                        )
-                    )
-                except Exception:
-                    out.append((doc_id, None))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
-
-    return df.select("doc_id", payload_col).mapInPandas(_res, schema)
+    return _map_payloads(df, PAYLOAD_SCHEMA, rows)
 
 
 def fir_rational_taps(up: int, down: int) -> "np.ndarray":  # noqa: F821
@@ -2769,66 +2571,37 @@ def resample_rational_kernel(samples, up: int, down: int) -> "np.ndarray":  # no
     return y[:n_out].astype(np.int16)
 
 
-def resample_audio_rational(
-    df: DataFrame, *, up: int, down: int, payload_col: str = "payload"
-) -> DataFrame:
-    """Rational-rate (L/M) resampler over the audio column — the polyphase
-    seam named in r10 closed with the same integer-exact discipline as
-    the decimator: REAL decode → zero-stuff by L → integer windowed-sinc
-    FIR (anti-image + anti-alias, gain L) → keep every M-th → REAL
-    re-encode at ``rate * L / M``. Channel-aware (r12): each channel runs
-    the SAME :func:`resample_rational_kernel` independently after frame
-    deinterleaving (every channel yields the identical ``ceil(n·L/M)``
-    output length, so reinterleaving is a plain reshape) — mono payloads
-    are bit-unchanged. Payloads whose ``rate * L`` is not divisible by M
-    (a non-integral target rate) or below M are rejected → NULL row. 1:1
-    ``mapInPandas``, narrow map."""
+def resample_audio_rational(df: DataFrame, *, up: int, down: int) -> DataFrame:
+    """Rational-rate (L/M) resampler over the audio column, with the same
+    integer-exact discipline as the decimator: REAL decode → zero-stuff
+    by L → integer windowed-sinc FIR (anti-image + anti-alias, gain L) →
+    keep every M-th → REAL re-encode at ``rate * L / M``. Channel-aware:
+    each channel runs the SAME :func:`resample_rational_kernel`
+    independently after frame deinterleaving (every channel yields the
+    identical ``ceil(n·L/M)`` output length, so reinterleaving is a plain
+    reshape) — mono payloads are bit-unchanged. Payloads whose ``rate *
+    L`` is not divisible by M (a non-integral target rate) or below M are
+    rejected → NULL row. 1:1 ``mapInPandas``, narrow map."""
+    import numpy as np
+
     if up < 1 or down < 1:
         raise ValueError("up/down factors must be >= 1")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
 
-    def _res(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import numpy as np
-        import pandas as pd
+    def rows(payload):
+        rate, ch, s = decode_audio(payload)
+        if (rate * up) % down or rate * up < down:
+            raise ValueError("target rate is not a positive integer")
+        planes = s.reshape(-1, ch)  # (frames, ch)
+        y = np.stack(
+            [resample_rational_kernel(planes[:, c], up, down) for c in range(ch)],
+            axis=1,
+        ).reshape(-1)
+        yield (encode_wav(y, sample_rate=rate * up // down, channels=ch),)
 
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                try:
-                    rate, ch, s = decode_audio(bytes(payload))
-                    if (rate * up) % down or rate * up < down:
-                        raise ValueError("target rate is not a positive integer")
-                    planes = s.reshape(-1, ch)  # (frames, ch)
-                    y = np.stack(
-                        [
-                            resample_rational_kernel(planes[:, c], up, down)
-                            for c in range(ch)
-                        ],
-                        axis=1,
-                    ).reshape(-1)
-                    out.append(
-                        (
-                            doc_id,
-                            encode_wav(
-                                y, sample_rate=rate * up // down, channels=ch
-                            ),
-                        )
-                    )
-                except Exception:
-                    out.append((doc_id, None))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
-
-    return df.select("doc_id", payload_col).mapInPandas(_res, schema)
+    return _map_payloads(df, PAYLOAD_SCHEMA, rows)
 
 
-def transcode_audio_pcm(
-    df: DataFrame, *, bits: int, payload_col: str = "payload"
-) -> DataFrame:
+def transcode_audio_pcm(df: DataFrame, *, bits: int) -> DataFrame:
     """Transcode WAV payloads to 8-bit unsigned or 24-bit signed PCM WAVE
     (format code 1): REAL decode → :func:`encode_wav_pcm8` /
     :func:`encode_wav_pcm24`. 24-bit is lossless on the whole int16 range
@@ -2839,32 +2612,15 @@ def transcode_audio_pcm(
     if bits not in (8, 24):
         raise ValueError("bits must be 8 or 24")
     enc = encode_wav_pcm8 if bits == 8 else encode_wav_pcm24
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
 
-    def _trans(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    def rows(payload):
+        rate, ch, s = decode_audio(payload)
+        yield (enc(s, sample_rate=rate, channels=ch),)
 
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                try:
-                    rate, ch, s = decode_audio(bytes(payload))
-                    out.append((doc_id, enc(s, sample_rate=rate, channels=ch)))
-                except Exception:
-                    out.append((doc_id, None))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
-
-    return df.select("doc_id", payload_col).mapInPandas(_trans, schema)
+    return _map_payloads(df, PAYLOAD_SCHEMA, rows)
 
 
-def transcode_audio_g711(
-    df: DataFrame, *, law: str, payload_col: str = "payload"
-) -> DataFrame:
+def transcode_audio_g711(df: DataFrame, *, law: str) -> DataFrame:
     """Transcode WAV payloads to G.711 companded WAVE (mu-law code 7 /
     A-law code 6): REAL decode → :func:`encode_wav_g711`. Lossy but
     MEMORYLESS — downstream decodes equal :func:`g711_reference`, a pure
@@ -2873,32 +2629,15 @@ def transcode_audio_g711(
     ``mapInPandas``, narrow map; undecodable payloads → NULL row."""
     if law not in _G711_CODES:
         raise ValueError("law must be 'mulaw' or 'alaw'")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
 
-    def _trans(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    def rows(payload):
+        rate, ch, s = decode_audio(payload)
+        yield (encode_wav_g711(s, law=law, sample_rate=rate, channels=ch),)
 
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                try:
-                    rate, ch, s = decode_audio(bytes(payload))
-                    out.append(
-                        (doc_id, encode_wav_g711(s, law=law, sample_rate=rate, channels=ch))
-                    )
-                except Exception:
-                    out.append((doc_id, None))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
-
-    return df.select("doc_id", payload_col).mapInPandas(_trans, schema)
+    return _map_payloads(df, PAYLOAD_SCHEMA, rows)
 
 
-def transcode_audio_adpcm(df: DataFrame, *, payload_col: str = "payload") -> DataFrame:
+def transcode_audio_adpcm(df: DataFrame) -> DataFrame:
     """Transcode WAV payloads to IMA ADPCM (format code 0x11): REAL decode
     → :func:`encode_wav_adpcm`. The codec is LOSSY (4-bit residuals), but
     deterministically so — downstream decodes equal
@@ -2907,99 +2646,58 @@ def transcode_audio_adpcm(df: DataFrame, *, payload_col: str = "payload") -> Dat
     compressed-container loop (block headers, nibble packing, fact-chunk
     truncation, state machine) is hash-checked, not just attested. 1:1
     ``mapInPandas``, narrow map; undecodable payloads → NULL row."""
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
 
-    def _trans(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    def encode_batch(payloads):
+        # per-row decode errors stay in their rows; good rows batch-encode
+        # through the vectorized lane kernel
+        out = decode_audio_batch(payloads)
+        good = [i for i, d in enumerate(out) if not isinstance(d, Exception)]
+        items = [(out[i][2], out[i][0], out[i][1]) for i in good]
+        try:
+            encoded = encode_wav_adpcm_batch(items)
+        except Exception:
+            # a row the batch validation rejected: encode each scalar so
+            # only the offending row carries the error
+            encoded = []
+            for s, rate, ch in items:
+                try:
+                    encoded.append(encode_wav_adpcm(s, sample_rate=rate, channels=ch))
+                except Exception as exc:
+                    encoded.append(exc)
+        for i, enc in zip(good, encoded):
+            out[i] = enc
+        return out
 
-        for pdf in batches:
-            n = len(pdf)
-            payloads: list = [None] * n
-            # per-row decode errors → NULL rows; good rows batch-encode
-            # through the vectorized lane kernel (r15)
-            decoded = decode_audio_batch(list(pdf[payload_col]))
-            good_idx = [i for i, d in enumerate(decoded) if not isinstance(d, Exception)]
-            items = [(decoded[i][2], decoded[i][0], decoded[i][1]) for i in good_idx]
-            try:
-                encoded = encode_wav_adpcm_batch(items)
-            except Exception:
-                # a row the batch validation rejected: encode each scalar
-                # so only the offending row carries the error
-                encoded = []
-                for s, rate, ch in items:
-                    try:
-                        encoded.append(
-                            encode_wav_adpcm(s, sample_rate=rate, channels=ch)
-                        )
-                    except Exception:
-                        encoded.append(None)
-            for i, enc in zip(good_idx, encoded):
-                payloads[i] = enc
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(_trans, schema)
+    return _map_payloads(df, PAYLOAD_SCHEMA, lambda enc: [(enc,)], encode_batch)
 
 
-def transcode_audio_flac(
-    df: DataFrame, *, payload_col: str = "payload", mid_side: bool = False
-) -> DataFrame:
-    """Transcode WAV payloads through the FLAC codec (r14): REAL WAV
-    decode → :func:`ibc_spark.ext.flaccodec.encode_flac` (STREAMINFO
-    with real MD5, fixed-predictor subframes, Rice residuals, CRC-8/16)
-    → :func:`decode_flac` (CRC- and MD5-verified) → WAV re-encode.
-    FLAC is LOSSLESS, so the downstream features oracle hash-proves the
-    whole compressed loop is the identity — the strongest attestation a
-    codec path can get. ``mid_side`` exercises the stereo decorrelation
+def transcode_audio_flac(df: DataFrame, *, mid_side: bool = False) -> DataFrame:
+    """Transcode WAV payloads through the FLAC codec: REAL WAV decode →
+    :func:`ibc_spark.ext.flaccodec.encode_flac` (STREAMINFO with real
+    MD5, fixed-predictor subframes, Rice residuals, CRC-8/16) →
+    :func:`decode_flac` (CRC- and MD5-verified) → WAV re-encode. FLAC is
+    LOSSLESS, so the downstream features oracle hash-proves the whole
+    compressed loop is the identity — the strongest attestation a codec
+    path can get. ``mid_side`` exercises the stereo decorrelation
     assignment. 1:1 ``mapInPandas``, narrow map; undecodable payloads →
     NULL row."""
+    import numpy as np
+
     from ibc_spark.ext.flaccodec import decode_flac, encode_flac
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
+    def rows(payload):
+        rate, ch, s = decode_audio(payload)
+        arr = np.asarray(s, dtype=np.int64).reshape(-1, ch)
+        fl = encode_flac(
+            arr if ch > 1 else arr[:, 0], sample_rate=rate, mid_side=mid_side and ch == 2
+        )
+        r2, dec = decode_flac(fl)
+        yield (encode_wav(dec.reshape(-1), sample_rate=r2, channels=ch),)
 
-    def _trans(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                try:
-                    rate, ch, s = decode_audio(bytes(payload))
-                    arr = np.asarray(s, dtype=np.int64).reshape(-1, ch)
-                    fl = encode_flac(
-                        arr if ch > 1 else arr[:, 0],
-                        sample_rate=rate,
-                        mid_side=mid_side and ch == 2,
-                    )
-                    r2, dec = decode_flac(fl)
-                    out.append(
-                        (
-                            doc_id,
-                            encode_wav(
-                                dec.reshape(-1), sample_rate=r2, channels=ch
-                            ),
-                        )
-                    )
-                except Exception:
-                    out.append((doc_id, None))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
-
-    return df.select("doc_id", payload_col).mapInPandas(_trans, schema)
+    return _map_payloads(df, PAYLOAD_SCHEMA, rows)
 
 
-def transcode_audio_float(df: DataFrame, *, payload_col: str = "payload") -> DataFrame:
+def transcode_audio_float(df: DataFrame) -> DataFrame:
     """Transcode int16-PCM WAV payloads to 32-bit IEEE-float PCM WAV
     (format code 3): REAL decode → ``k / 32768`` float32 (exact in binary
     floating point for every int16 ``k``) → :func:`encode_wav_float`.
@@ -3007,31 +2705,14 @@ def transcode_audio_float(df: DataFrame, *, payload_col: str = "payload") -> Dat
     int16→float→int16 loop is the identity on the full int16 range — the
     property ``multimodal_audio_float_pcm`` hash-checks. 1:1
     ``mapInPandas``, narrow map; undecodable payloads → NULL row."""
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
+    import numpy as np
 
-    def _trans(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import numpy as np
-        import pandas as pd
+    def rows(payload):
+        rate, ch, s = decode_audio(payload)
+        f = (s.astype(np.float64) / 32768.0).astype("<f4")
+        yield (encode_wav_float(f, sample_rate=rate, channels=ch),)
 
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                try:
-                    rate, ch, s = decode_audio(bytes(payload))
-                    f = (s.astype(np.float64) / 32768.0).astype("<f4")
-                    out.append(
-                        (doc_id, encode_wav_float(f, sample_rate=rate, channels=ch))
-                    )
-                except Exception:
-                    out.append((doc_id, None))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
-
-    return df.select("doc_id", payload_col).mapInPandas(_trans, schema)
+    return _map_payloads(df, PAYLOAD_SCHEMA, rows)
 
 
 # Spectral VAD: single-pass DFT band energy, INTEGER arithmetic end to
@@ -3082,11 +2763,11 @@ SPECTRAL_VAD_SCHEMA = T.StructType(
 )
 
 
-def spectral_vad_frames(df: DataFrame, *, payload_col: str = "payload") -> DataFrame:
-    """SPECTRAL voice-activity gate (the r10 'energy-threshold only' seam
-    closed): REAL WAV decode → non-overlapping 32-sample frames (partial
-    tail frame dropped) → per-frame speech-band energy via a 6-bin
-    integer DFT (``a_k = floor(Σ x·c_k / 1024)``, ``E_band = Σ_k a_k² +
+def spectral_vad_frames(df: DataFrame) -> DataFrame:
+    """SPECTRAL voice-activity gate (a band-energy decision, not a bare
+    energy threshold): REAL WAV decode → non-overlapping 32-sample
+    frames (partial tail frame dropped) → per-frame speech-band energy
+    via a 6-bin integer DFT (``a_k = floor(Σ x·c_k / 1024)``, ``E_band = Σ_k a_k² +
     b_k²``) → voiced iff the in-band spectral fraction clears 3/8
     (integer form ``E_band >= 6·E_total``). Every step is integer-exact,
     so frame decisions — not just energies — are hash-checked against the
@@ -3094,10 +2775,9 @@ def spectral_vad_frames(df: DataFrame, *, payload_col: str = "payload") -> DataF
     construction (|a_k| ≤ 2^20, E_band ≤ 2^43, E_total ≤ 2^35). A real
     speech stack swaps in mel filterbanks + a learned model here; the
     plumbing (frame shape, per-frame fan-out, integer band energies) is
-    the production layout. Channel-aware (r12 — the mono-only seam named
-    by the r11 verdict closed): frames deinterleave and each channel is
-    framed and scored INDEPENDENTLY, one output row per (doc, channel,
-    frame) with an explicit ``channel`` index (0 for mono corpora) — the
+    the production layout. Channel-aware: frames deinterleave and each
+    channel is framed and scored INDEPENDENTLY, one output row per (doc,
+    channel, frame) with an explicit ``channel`` index (0 for mono corpora) — the
     one extra join key the SQL oracle needs. 1:N ``mapInPandas``, narrow
     map; undecodable payloads emit no frames."""
     C, D = spectral_coef_tables()
@@ -3109,7 +2789,7 @@ def spectral_vad_frames(df: DataFrame, *, payload_col: str = "payload") -> DataF
         cols = [f.name for f in SPECTRAL_VAD_SCHEMA.fields]
         for pdf in batches:
             acc = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 try:
                     _rate, ch, s = decode_audio(bytes(payload))
                 except Exception:
@@ -3147,7 +2827,7 @@ def spectral_vad_frames(df: DataFrame, *, payload_col: str = "payload") -> DataF
                 }
             )
 
-    return df.select("doc_id", payload_col).mapInPandas(_frames, SPECTRAL_VAD_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(_frames, SPECTRAL_VAD_SCHEMA)
 
 
 VAD_SCHEMA = T.StructType(
@@ -3162,14 +2842,17 @@ VAD_SCHEMA = T.StructType(
 )
 
 
-def vad_segments(
-    df: DataFrame, *, threshold: int = 8192, payload_col: str = "payload"
-) -> DataFrame:
+# |sample| at or above which a frame counts as voiced in vad_segments —
+# shared with the SQL oracle like the spectral-VAD constants
+VAD_THRESHOLD = 8192
+
+
+def vad_segments(df: DataFrame) -> DataFrame:
     """Energy-based voice-activity segmentation: REAL WAV decode →
-    maximal runs of ``|sample| >= threshold`` → one row per voiced
+    maximal runs of ``|sample| >= VAD_THRESHOLD`` → one row per voiced
     segment (start frame, length, peak) — a 1:N ``mapInPandas`` fan-out,
-    the exact shape a production VAD emits. Channel-aware (r12, matching
-    the spectral gate): frames deinterleave and each channel segments
+    the exact shape a production VAD emits. Channel-aware, matching the
+    spectral gate: frames deinterleave and each channel segments
     INDEPENDENTLY, rows carrying an explicit ``channel`` index (0 for
     mono; ``seg_idx`` restarts per channel). Pure index arithmetic on the
     decoded PCM (the spectral/model-based VAD a speech stack adds is the
@@ -3190,7 +2873,7 @@ def vad_segments(
             # realistic-payload sweep (a 16 k-sample clip yields
             # thousands of runs)
             acc: list[tuple] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 try:
                     _rate, ch, s = decode_audio(bytes(payload))
                     planes = np.abs(s.astype(np.int64)).reshape(-1, ch)
@@ -3198,7 +2881,7 @@ def vad_segments(
                     continue
                 for c in range(ch):
                     s64 = planes[:, c]
-                    active = s64 >= threshold
+                    active = s64 >= VAD_THRESHOLD
                     if not active.any():
                         continue
                     # run boundaries: starts where active rises, ends
@@ -3235,4 +2918,4 @@ def vad_segments(
                 }
             )
 
-    return df.select("doc_id", payload_col).mapInPandas(_segs, VAD_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(_segs, VAD_SCHEMA)

@@ -45,6 +45,20 @@ from pyspark.sql.datasource import (
 _DEFAULT_TIMEOUT = 10.0
 
 
+def _fetch_tuples(schema: T.StructType, url: str, timeout: float) -> list[tuple]:
+    """Fetch the sheet and project each row object onto ``schema``, for
+    the batch and the streaming reader alike: a missing key is NULL, a
+    value of a STRING field is stringified like a sheet export, and a
+    value of a typed field passes through for Spark to convert."""
+    from ibc_spark.io_.sources import fetch_sheet_rows
+
+    fields = [(f.name, isinstance(f.dataType, T.StringType)) for f in schema.fields]
+    return [
+        tuple(str(r[n]) if s and r.get(n) is not None else r.get(n) for n, s in fields)
+        for r in fetch_sheet_rows(url, timeout=timeout)
+    ]
+
+
 class SheetDataSource(DataSource):
     """``spark.read.format("sheet")`` — see module docstring."""
 
@@ -64,17 +78,9 @@ class SheetDataSource(DataSource):
         return float(self.options.get("timeout", _DEFAULT_TIMEOUT))
 
     def schema(self) -> T.StructType:
-        from ibc_spark.io_.sources import fetch_sheet_rows
+        from ibc_spark.io_.sources import fetch_sheet_rows, union_schema
 
-        rows = fetch_sheet_rows(self._url(), timeout=self._timeout())
-        fields: list[str] = []
-        for row in rows:
-            for key in row:
-                if key not in fields:
-                    fields.append(key)
-        return T.StructType(
-            [T.StructField(f, T.StringType(), nullable=True) for f in fields]
-        )
+        return union_schema(fetch_sheet_rows(self._url(), timeout=self._timeout()))
 
     def reader(self, schema: T.StructType) -> "SheetReader":
         return SheetReader(schema, self._url(), self._timeout())
@@ -99,18 +105,7 @@ class SheetReader(DataSourceReader):
         return [InputPartition(0)]
 
     def read(self, partition: InputPartition) -> Iterator[tuple]:
-        from ibc_spark.io_.sources import fetch_sheet_rows
-
-        rows = fetch_sheet_rows(self._url, timeout=self._timeout)
-        names = [f.name for f in self._schema.fields]
-        strings = {
-            f.name for f in self._schema.fields if isinstance(f.dataType, T.StringType)
-        }
-        for row in rows:
-            yield tuple(
-                (str(v) if name in strings and v is not None else v)
-                for name, v in ((n, row.get(n)) for n in names)
-            )
+        return iter(_fetch_tuples(self._schema, self._url, self._timeout))
 
 
 class SheetStreamReader(SimpleDataSourceStreamReader):
@@ -129,21 +124,11 @@ class SheetStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"n": 0}
 
-    def _rows(self) -> list[tuple]:
-        from ibc_spark.io_.sources import fetch_sheet_rows
-
-        rows = fetch_sheet_rows(self._url, timeout=self._timeout)
-        names = [f.name for f in self._schema.fields]
-        return [
-            tuple(None if row.get(n) is None else str(row.get(n)) for n in names)
-            for row in rows
-        ]
-
     def read(self, start: dict) -> tuple:
-        rows = self._rows()
+        rows = _fetch_tuples(self._schema, self._url, self._timeout)
         lo = int(start.get("n", 0))
         return iter(rows[lo:]), {"n": max(len(rows), lo)}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        rows = self._rows()
+        rows = _fetch_tuples(self._schema, self._url, self._timeout)
         return iter(rows[int(start.get("n", 0)) : int(end.get("n", 0))])

@@ -7,8 +7,9 @@ reason string (``row_is_valid`` ``staffing-roster-pipeline.py:60-73``,
 and signals failures with exceptions from the E001–E005 taxonomy
 (``errors.py:1-25``). The engine makes errors *data*: one pass computes a
 ``_reason``/``_error_code`` pair per row; the valid frame is the NULL-reason
-complement. Both frames come from a single cached scan — no second read, no
-driver round trips, partition-parallel at any scale.
+complement. Both frames are filters of one tagged frame — no driver round
+trips, partition-parallel at any scale; a caller that consumes both sides
+passes ``cache=True`` to scan its input once.
 """
 
 from __future__ import annotations
@@ -66,8 +67,9 @@ def validate_split(
     reference reports one reason per row).
 
     ``cache`` defaults to False — a library caller at 100 TB must opt into
-    materialization; the E1/E2 pipelines (which consume BOTH sides of a
-    small sheet batch) pass ``cache=True``.
+    materialization. The projects pipeline (E2), which consumes BOTH sides
+    of a small sheet batch, passes ``cache=True``; the roster pipeline (E1)
+    caches its deduplicated batch upstream and keeps the default.
     """
     reason = missing_required_reason(required)
     for predicate, msg in extra_rules or []:

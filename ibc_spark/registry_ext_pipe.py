@@ -1938,14 +1938,7 @@ def streaming_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = read_documents_stream(spark, sf_dir)
     feats = _audio_feature_pipeline(docs)
-    return _run_stream_to_memory(
-        spark,
-        lambda name: feats.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True),
-        "streaming_audio_features",
-    )
+    return _run_stream_to_memory(spark, feats, "append", "streaming_audio_features")
 
 
 # ---------------------------------------------------------------------------
@@ -2388,14 +2381,7 @@ def streaming_audio_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = multimodal.audio_features(
         multimodal.transcode_audio_flac(multimodal.attach_audio(docs))
     )
-    return _run_stream_to_memory(
-        spark,
-        lambda name: feats.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True),
-        "streaming_audio_flac",
-    )
+    return _run_stream_to_memory(spark, feats, "append", "streaming_audio_flac")
 
 
 @query("multimodal_image_roundtrip_tga", oracle=_ROUNDTRIP_ORACLE)

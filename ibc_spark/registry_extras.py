@@ -70,10 +70,13 @@ _STREAM_SHUFFLE_PARTITIONS = "8"
 _STREAM_VIEWS: dict[str, str] = {}
 
 
-def _run_stream_to_memory(spark: SparkSession, make_writer, prefix: str) -> DataFrame:
-    """Run a streaming writer into a fresh in-memory sink table and return
-    that table, owning the resources a bare start/await leaks (bench runs
-    every entry 3x and tests re-invoke them — ADVICE r6):
+def _run_stream_to_memory(
+    spark: SparkSession, frame: DataFrame, output_mode: str, prefix: str
+) -> DataFrame:
+    """Drain the streaming ``frame`` into a fresh in-memory sink table with
+    one ``availableNow`` run in ``output_mode`` and return that table,
+    owning the resources a bare start/await leaks (bench runs every entry
+    3x and tests re-invoke them):
 
     - the checkpoint dir is a throwaway tempdir, removed once the
       availableNow run terminates (the sink data lives in driver memory;
@@ -85,9 +88,9 @@ def _run_stream_to_memory(spark: SparkSession, make_writer, prefix: str) -> Data
       callers materialize it before re-invoking the entry — true for the
       driver, bench, and tests.)
 
-    ``make_writer(query_name)`` builds the writer; the shuffle-partition
-    override is scoped here because a streaming query materializes inside
-    ``awaitTermination`` — so set/restore is race-free, unlike batch."""
+    The shuffle-partition override is scoped here because a streaming
+    query materializes inside ``awaitTermination`` — so set/restore is
+    race-free, unlike batch."""
     import shutil
 
     prev = _STREAM_VIEWS.pop(prefix, None)
@@ -99,7 +102,7 @@ def _run_stream_to_memory(spark: SparkSession, make_writer, prefix: str) -> Data
     name = f"{prefix}_{next(_STREAM_SEQ)}"
     # record BEFORE start(): a run that fails inside awaitTermination has
     # already registered its sink view, and an untracked name could never
-    # be dropped by the next invocation (review r7) — dropping a name that
+    # be dropped by the next invocation — dropping a name that
     # never materialized is a harmless no-op above.
     _STREAM_VIEWS[prefix] = name
     ckpt = tempfile.mkdtemp(prefix="ibc_stream_ckpt_")
@@ -108,7 +111,10 @@ def _run_stream_to_memory(spark: SparkSession, make_writer, prefix: str) -> Data
     spark.conf.set(key, _STREAM_SHUFFLE_PARTITIONS)
     try:
         q = (
-            make_writer(name)
+            frame.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
             .option("checkpointLocation", os.path.join(ckpt, "q"))
             .start()
         )
@@ -155,14 +161,7 @@ def streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum(dec("value", 10, 2)).cast("double").alias("total_value"),
     )
-    tbl = _run_stream_to_memory(
-        spark,
-        lambda name: agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True),
-        "streaming_hourly_rollup",
-    )
+    tbl = _run_stream_to_memory(spark, agg, "complete", "streaming_hourly_rollup")
     return tbl.select(
         F.col("w.start").alias("window_start"),
         "event_type",
@@ -208,12 +207,7 @@ def streaming_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame
         corpus, bits, id_col="doc_id", text_col="text", n=8, m_bits=_BLOOM_M, k=_BLOOM_K
     )
     return _run_stream_to_memory(
-        spark,
-        lambda name: flagged.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True),
-        "streaming_decontaminate_bloom",
+        spark, flagged, "append", "streaming_decontaminate_bloom"
     )
 
 
@@ -592,14 +586,7 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    tbl = _run_stream_to_memory(
-        spark,
-        lambda name: agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True),
-        "streaming_sessionize",
-    )
+    tbl = _run_stream_to_memory(spark, agg, "append", "streaming_sessionize")
     return tbl.select(
         "user_id",
         F.col("w.start").alias("session_start"),
@@ -674,14 +661,7 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         (F.unix_timestamp("p_ts") - F.unix_timestamp("c_ts")).alias("gap_seconds"),
     )
-    return _run_stream_to_memory(
-        spark,
-        lambda name: j.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True),
-        "streaming_stream_join",
-    )
+    return _run_stream_to_memory(spark, j, "append", "streaming_stream_join")
 
 
 # ---------------------------------------------------------------------------
@@ -929,14 +909,7 @@ def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     both = feed().unionByName(feed())
     deduped = both.dropDuplicates(["sha"])
-    return _run_stream_to_memory(
-        spark,
-        lambda name: deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True),
-        "streaming_dedup_exact",
-    )
+    return _run_stream_to_memory(spark, deduped, "append", "streaming_dedup_exact")
 
 
 @query(
@@ -969,12 +942,7 @@ def streaming_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     both = feed().unionByName(feed()).withWatermark("ingest_ts", "10 minutes")
     deduped = both.dropDuplicatesWithinWatermark(["sha"]).select("sha")
     return _run_stream_to_memory(
-        spark,
-        lambda name: deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True),
-        "streaming_dedup_watermarked",
+        spark, deduped, "append", "streaming_dedup_watermarked"
     )
 
 
@@ -1617,14 +1585,7 @@ def streaming_sketch_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    tbl = _run_stream_to_memory(
-        spark,
-        lambda name: upd.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True),
-        "streaming_sketch_kmv",
-    )
+    tbl = _run_stream_to_memory(spark, upd, "update", "streaming_sketch_kmv")
     w = Window.partitionBy("event_type").orderBy(
         F.col("n_in_state").desc(), F.col("approx_users").desc()
     )

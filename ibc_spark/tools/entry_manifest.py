@@ -152,31 +152,42 @@ def save_manifest(m: dict) -> None:
         fh.write("\n")
 
 
+def drifted() -> dict[str, int]:
+    """Entries whose implementation closure differs from the hash recorded
+    at their last green driver round, each mapped to that round —
+    ``_FORCE_RECHECK`` members included. Never-green entries and entries
+    missing from the manifest are not drift."""
+    from ibc_spark.registry import QUERIES
+
+    entries = load_manifest().get("entries", {})
+    green = _last_green_rounds()
+    return {
+        name: green[name]
+        for name in QUERIES
+        if green.get(name, 0) > 0
+        and name in entries
+        and compute_entry_hash(name) != entries[name]["hash"]
+    }
+
+
 def check() -> list[str]:
     """Return human-readable violations (empty == clean)."""
     from ibc_spark.registry import QUERIES
 
     sys.path.insert(0, _REPO)
-    entry_mod = __import__("__spark_entry__")
-    excused = entry_mod._FORCE_RECHECK
-    manifest = load_manifest()
-    entries = manifest.get("entries", {})
-    green = _last_green_rounds()
-    problems = []
-    for name in QUERIES:
-        rec = entries.get(name)
-        if rec is None:
-            problems.append(
-                f"{name}: not in conf/entry_manifest.json — run "
-                f"`python -m ibc_spark.tools.entry_manifest refresh`"
-            )
-            continue
-        if green.get(name, 0) == 0:
-            continue  # never driver-green: attests current semantics anyway
-        if compute_entry_hash(name) != rec["hash"] and name not in excused:
+    excused = __import__("__spark_entry__")._FORCE_RECHECK
+    entries = load_manifest().get("entries", {})
+    problems = [
+        f"{name}: not in conf/entry_manifest.json — run "
+        f"`python -m ibc_spark.tools.entry_manifest refresh`"
+        for name in QUERIES
+        if name not in entries
+    ]
+    for name, rnd in drifted().items():
+        if name not in excused:
             problems.append(
                 f"{name}: implementation closure changed since its last green "
-                f"driver round (r{green.get(name, 0)}). Either add it to "
+                f"driver round (r{rnd}). Either add it to "
                 f"_FORCE_RECHECK in __spark_entry__.py, or — if the edit is "
                 f"semantics-preserving and tests/test_oracle_parity.py is "
                 f"green — run `python -m ibc_spark.tools.entry_manifest ack "

@@ -24,7 +24,6 @@ It mechanically performs what rounds 11/12 did by hand:
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -43,24 +42,15 @@ def main() -> int:
         print("(no manifest changes)")
 
     print("\n== step 2: derived force set ==")
-    problems = entry_manifest.check()
     import __spark_entry__ as entry_mod
-    from ibc_spark.registry import QUERIES
 
-    # The RAW drift set (ignoring the _FORCE_RECHECK excuse list
-    # check() applies): every entry whose closure hash differs from the
-    # one pinned at its last green driver round. Entries already in
-    # _FORCE_RECHECK are listed as covered, not as violations.
-    manifest = entry_manifest.load_manifest().get("entries", {})
-    greens = entry_manifest._last_green_rounds()
-    drifted = sorted(
-        n
-        for n in QUERIES
-        if greens.get(n, 0) > 0
-        and n in manifest
-        and entry_manifest.compute_entry_hash(n) != manifest[n]["hash"]
-    )
-    uncovered = sorted(p.split(":", 1)[0] for p in problems)
+    # The RAW drift set (ignoring the _FORCE_RECHECK excuse list check()
+    # applies): every entry whose closure hash differs from the one pinned
+    # at its last green driver round. Step 1 recorded every registered
+    # entry, so the drifted entries outside _FORCE_RECHECK are exactly
+    # check()'s violations.
+    drifted = sorted(entry_manifest.drifted())
+    uncovered = [n for n in drifted if n not in entry_mod._FORCE_RECHECK]
     if drifted:
         print("closure changed since last green driver round:")
         for name in drifted:
@@ -80,7 +70,7 @@ def main() -> int:
             print(f"  {name}")
 
     print("\n== step 3: guard ==")
-    if problems:
+    if uncovered:
         print("VIOLATIONS — resolve before building (see step 2).")
         return 1
     print("CLEAN — manifest refreshed, pytest freshness guard will pass.")

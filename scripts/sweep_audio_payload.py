@@ -1,15 +1,17 @@
-"""Audio-family sweep at REALISTIC payload sizes (VERDICT r10 #6).
+"""Audio-family sweep at REALISTIC payload sizes.
 
-The r10 sweeps drove the audio entries through the registry faces, whose
-oracle-pinned waveforms are 64-sample clips — Arrow/driver overhead
-dominates there and every exponent looks flat. This sweep drives the
-OPERATORS directly (attach → features / FIR resample / VAD, plus the
-streaming twin built inline) with ``head_len=16384`` — a 1 s clip at
-16 kHz — so per-sample decode/filter/segment cost is the signal.
+The registry faces of the audio entries use oracle-pinned 64-sample
+clips, where Arrow/driver overhead dominates and every exponent looks
+flat. This sweep drives the OPERATORS directly (attach → features / FIR
+resample / VAD, plus the streaming twin built inline) with
+``head_len=16384`` — a 1 s clip at 16 kHz — so per-sample
+decode/filter/segment cost is the signal.
 
-Two axes, one session per SF, over the scale factors named in
-``IBC_SWEEP_SFS`` (default ``sf0.1,sf1,sf3``; directories resolved by
-``ibc_spark.tools.timing.scale_dir``, missing ones skipped):
+Two axes over the scale factors named in ``IBC_SWEEP_SFS`` (default
+``sf0.1,sf1,sf3``; directories resolved by
+``ibc_spark.tools.timing.scale_dir``, missing ones skipped), one session
+per SF, each warmed by ``ibc_spark.tools.timing.warm_session`` so the
+first timed pipeline does not carry the session's first-query cost:
 - corpus axis: every listed SF's documents at 16 k samples/doc —
   exponent should be ~1 (narrow maps).
 - payload axis: the first listed SF's documents at head_len 64 → 1024
@@ -84,8 +86,7 @@ def _pipelines(head_len: int):
 
 def main() -> None:
     runs = max(1, int(os.environ.get("BENCH_RUNS", "3")))
-    from ibc_spark.session import get_spark
-    from ibc_spark.tools.timing import cold_samples, median
+    from ibc_spark.tools.timing import cold_samples, median, warm_session
 
     results: dict[str, dict[str, float]] = {}
 
@@ -98,7 +99,7 @@ def main() -> None:
 
     # ---- corpus axis at 16 k samples ----
     for sf_name, sf_dir in sfs:
-        spark = get_spark(f"audio_sweep_{sf_name}")
+        spark = warm_session(f"audio_sweep_{sf_name}", sf_dir)
         docs = _docs_with_long_text(spark, sf_dir, 16384)
         for name, pipe in _pipelines(16384).items():
             med = median(cold_samples(spark, lambda: pipe(docs), runs))
@@ -108,7 +109,7 @@ def main() -> None:
 
     # ---- payload axis at the first SF ----
     base_name, base_dir = sfs[0]
-    spark = get_spark("audio_sweep_payload")
+    spark = warm_session("audio_sweep_payload", base_dir)
     for head_len in (64, 1024, 16384):
         docs = _docs_with_long_text(spark, base_dir, head_len)
         for name, pipe in _pipelines(head_len).items():
@@ -127,7 +128,7 @@ def main() -> None:
     for sf_name, sf_dir in sfs:
         # memory-sink query names must be single-part (no dots)
         safe = sf_name.replace(".", "")
-        spark = get_spark(f"audio_sweep_stream_{safe}")
+        spark = warm_session(f"audio_sweep_stream_{safe}", sf_dir)
         t0 = time.perf_counter()
         docs = read_documents_stream(spark, sf_dir)
         long_docs = docs.select(
@@ -138,12 +139,7 @@ def main() -> None:
         )
         feats = mm.audio_features(mm.attach_audio(long_docs, head_len=16384))
         out = _run_stream_to_memory(
-            spark,
-            lambda name: feats.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True),
-            f"audio_sweep_stream_{safe}",
+            spark, feats, "append", f"audio_sweep_stream_{safe}"
         )
         n = out.count()
         med = time.perf_counter() - t0

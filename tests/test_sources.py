@@ -225,6 +225,38 @@ def test_sheet_streaming_source_incremental(spark, tmp_path):
     assert got.select("Email").distinct().count() == 8  # no double-reads
 
 
+def test_sheet_streaming_source_typed_schema(spark, tmp_path):
+    """A typed schema streams like it reads in batch: STRING fields are
+    stringified, typed fields pass through (a stringified ``long`` used to
+    fail the query with an Arrow conversion error)."""
+    import json
+
+    from ibc_spark.io_.sheet_datasource import SheetDataSource
+
+    spark.dataSource.register(SheetDataSource)
+    url = _sheet_file(tmp_path, json.dumps([{"n": 1, "name": "a"}, {"n": 2}]))
+    want = [Row(n=1, name="a"), Row(n=2, name=None)]
+    batch = spark.read.format("sheet").schema("n long, name string").option("url", url)
+    assert sorted(batch.load().collect()) == want
+
+    q = (
+        spark.readStream.format("sheet")
+        .schema("n long, name string")
+        .option("url", url)
+        .load()
+        .writeStream.format("memory")
+        .queryName("sheet_typed_stream")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    try:
+        assert sorted(spark.table("sheet_typed_stream").collect()) == want
+    finally:
+        spark.catalog.dropTempView("sheet_typed_stream")
+
+
 def test_xml_source_sink_round_trip(spark, tmp_path):
     """Native Spark-4 XML: write one element per row, read back with a
     pinned schema — types and NULLs preserved (empty-string column comes

@@ -315,14 +315,7 @@ def test_streaming_kmv_batch_split_insensitive(spark, tmp_path):
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    tbl = _run_stream_to_memory(
-        spark,
-        lambda name: upd.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True),
-        "streaming_sketch_kmv_split",
-    )
+    tbl = _run_stream_to_memory(spark, upd, "update", "streaming_sketch_kmv_split")
     w = Window.partitionBy("event_type").orderBy(
         F.col("n_in_state").desc(), F.col("approx_users").desc()
     )
