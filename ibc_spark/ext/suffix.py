@@ -206,53 +206,30 @@ def _token_stream(
 _FAST_CAP = 128
 
 
-def _sizes(
-    df: DataFrame, text_col: str, id_col: str | None = None
-) -> tuple[int, int, int, bool, int]:
-    """One upfront aggregate → (bound, n_pos, parts, flat_ok, max_chars).
-
-    ``bound``: the maxLCP bound = longest doc's token count (an LCP can
-    never cross a sentinel). ``n_pos``: total stream positions.
-    ``parts``: exchange width for the rank shuffles — ~10k positions per
-    partition (fat suffix-key rows sort CPU-bound, so they want real
-    parallelism), floored at 4 so a 27k-position oracle corpus skips
-    32-task stage latency, capped by the session's shuffle parallelism so
-    a cluster-scale corpus fills whatever the session is tuned to.
-    ``flat_ok``: the corpus is free of sub-0x20 control characters — when
-    it is (the overwhelmingly common case), the space-joined key STRING
-    is order-equivalent to the token sequence (the separator sorts
-    strictly below every token byte, tokens cannot contain it, and a
-    joined prefix ends in the separator exactly when the sequence is a
-    proper prefix), so sorts run on binary string comparisons instead of
-    Spark's interpreted array comparator. ``max_chars``: bounds any
-    suffix string's length (text chars + one 'T' namespace byte per token
-    + the sentinel), sizing the LCP binary decomposition.
-
-    When ``id_col`` is given, the same aggregate also checks that
-    ``max(|doc_id|) · width`` fits int64 — ``gpos = doc_id·width + pos``
-    is injective only without overflow, and sparse/hashed ids (e.g.
-    63-bit content hashes) would wrap SILENTLY into wrong ranks. Fail
-    loudly instead (ADVICE r11)."""
-    idc = F.col(id_col) if id_col is not None else F.lit(0)
-    corpus = df.select(
-        idc.cast("long").alias("doc_id"),
-        F.concat(
-            F.transform(tokens(F.col(text_col)), lambda t: F.concat(F.lit("T"), t)),
-            F.array(F.concat(F.lit("S"), idc.cast("string"))),
-        ).alias("arr"),
-        F.length(F.col(text_col)).alias("n_chars"),
-        F.col(text_col).rlike("[\\x00-\\x08\\x0e-\\x1f]").alias("ctl"),
-    )
-    return _sizes_of(corpus, id_name=id_col)
-
-
 def _sizes_of(
     corpus: DataFrame, *, id_name: str | None = "doc_id"
 ) -> tuple[int, int, int, bool, int]:
-    """:func:`_sizes` over a prebuilt (persisted) :func:`_corpus` frame —
-    the one aggregate pass shared with stream construction. Same output
-    tuple, same guards; ``size(arr)`` is n_toks+1 per doc (−1 for a NULL
-    text, exactly mirroring the old ``size(tokens(text))`` arithmetic)."""
+    """One upfront aggregate over a prebuilt (persisted) :func:`_corpus`
+    frame → (bound, n_pos, parts, flat_ok, max_chars); the pass is shared
+    with stream construction.
+
+    ``bound``: the maxLCP bound = longest doc's token count (an LCP can
+    never cross a sentinel; ``size(arr)`` is n_toks+1 per doc, −1 for a
+    NULL text). ``n_pos``: total stream positions. ``parts``: exchange
+    width for the rank shuffles (see the sizing note below). ``flat_ok``:
+    the corpus is free of sub-0x20 control characters — when it is (the
+    overwhelmingly common case), the space-joined key STRING is
+    order-equivalent to the token sequence (the separator sorts strictly
+    below every token byte, tokens cannot contain it, and a joined prefix
+    ends in the separator exactly when the sequence is a proper prefix),
+    so sorts run on binary string comparisons instead of Spark's
+    interpreted array comparator. ``max_chars``: bounds any suffix
+    string's length, sizing the LCP binary decomposition.
+
+    When ``id_name`` is given, the same aggregate also checks that
+    ``max(|doc_id|) · width`` fits int64 — ``gpos = doc_id·width + pos``
+    is injective only without overflow, and sparse/hashed ids would wrap
+    SILENTLY into wrong ranks, so fail loudly instead."""
     aggs = [
         F.max(F.size(F.col("arr"))).alias("m1"),
         F.sum(F.greatest(F.size(F.col("arr")), F.lit(0))).alias("n"),
@@ -703,7 +680,7 @@ def build_suffix_array(
 ) -> tuple[DataFrame, list[tuple[int, DataFrame]]]:
     """Run seeded prefix doubling; return ``(positions, tables)``.
 
-    ``sizes``: the precomputed :func:`_sizes` tuple — pass it when the
+    ``sizes``: the precomputed :func:`_sizes_of` tuple — pass it when the
     caller (``_sa_core``) already ran the upfront aggregate, so the
     corpus isn't tokenized and sized twice per build (ADVICE r11).
     ``corpus``: the caller's persisted :func:`_corpus` frame (built here

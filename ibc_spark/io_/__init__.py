@@ -1,3 +1,3 @@
-from ibc_spark.io_.sources import TABLES, load_tables, read_table
+from ibc_spark.io_.sources import TABLES, read_table
 
-__all__ = ["TABLES", "load_tables", "read_table"]
+__all__ = ["TABLES", "read_table"]

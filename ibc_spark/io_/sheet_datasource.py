@@ -10,9 +10,10 @@ Makes the reference's HTTP sheet source (`staffing-roster-pipeline.py:75-87`
           .load())
 
 This is the PySpark-4 Python Data Source API (SPARK-44076) face of the
-same boundary `io_.sources.read_sheet` exposes functionally; both share
-:func:`ibc_spark.io_.sources.fetch_sheet_rows`, so the E005/E003 error
-taxonomy and the 10 s default timeout hold in either spelling.
+same boundary :func:`ibc_spark.io_.sources.fetch_sheet_rows` +
+``dataframe_from_rows`` expose functionally; both fetch through
+``fetch_sheet_rows``, so the E005/E003 error taxonomy and the 10 s default
+timeout hold in either spelling.
 
 Design notes:
 
@@ -26,7 +27,7 @@ Design notes:
   whose sheet fetch is one GET into memory.
 - **Transport**: executors re-fetch through the stdlib transport;
   ``file://`` URLs work (tests use them — no sockets). The injectable
-  in-process transport of ``read_sheet`` cannot cross the pickle
+  in-process transport of ``fetch_sheet_rows`` cannot cross the pickle
   boundary, which is exactly why both spellings exist.
 """
 

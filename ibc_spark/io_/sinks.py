@@ -7,13 +7,15 @@ set-based MERGE. Two layers:
 
 - :func:`merge_upsert` — the *dataset semantics* of MERGE (new-over-old by
   key) as a pure DataFrame expression. Oracle-able as SQL; also the
-  ``foreachBatch`` body for streaming sinks.
-- writers — Parquet append/overwrite for materialization. On a lakehouse
-  deployment the same dataset op becomes ``MERGE INTO`` (Delta/Iceberg); on
-  JDBC it becomes a keyed batch upsert with ``batchsize`` — both preserve
-  these semantics. Constraint violations are quarantine rows (E001), never
-  exceptions (``23505 → DataConflictError`` at
-  ``staffing-roster-pipeline.py:146-151``).
+  ``foreachBatch`` body for streaming sinks. On a lakehouse deployment the
+  same dataset op becomes ``MERGE INTO`` (Delta/Iceberg).
+- :func:`dbapi_upsert` — the same semantics landed in a DB-API database as
+  an executor-parallel keyed ``INSERT … ON CONFLICT`` batch upsert.
+  Constraint violations are quarantine rows (E001), never exceptions
+  (``23505 → DataConflictError`` at ``staffing-roster-pipeline.py:146-151``).
+
+Plain materialization needs no helper here: Spark's own
+``df.write.partitionBy(...).parquet``/``.orc``/``.format("xml")`` writers.
 """
 
 from __future__ import annotations
@@ -212,121 +214,3 @@ def dbapi_upsert(
             conn.close()
 
     df.foreachPartition(write_partition)
-
-
-def jdbc_writer(
-    df: DataFrame,
-    url: str,
-    table: str,
-    *,
-    mode: str = "append",
-    batchsize: int = 1000,
-    isolation_level: str = "READ_COMMITTED",
-    properties: dict[str, str] | None = None,
-):
-    """Plain JDBC append/overwrite writer (no upsert — use
-    :func:`dbapi_upsert` for keyed merges): configures
-    ``df.write.format('jdbc')`` with ``batchsize`` and
-    ``isolationLevel`` per SURVEY §2.8. Returns the configured writer
-    (call ``.save()``) so tests can exercise configuration without a
-    JDBC driver on the classpath."""
-    writer = (
-        df.write.format("jdbc")
-        .mode(mode)
-        .option("url", url)
-        .option("dbtable", table)
-        .option("batchsize", str(batchsize))
-        .option("isolationLevel", isolation_level)
-    )
-    for k, v in (properties or {}).items():
-        writer = writer.option(k, v)
-    return writer
-
-
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    *,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """Materialize. ``partition_by`` = on-disk partition pruning for later
-    reads; at 100 TB choose low-cardinality columns (date, region)."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def compact_parquet(
-    spark,
-    src_path: str,
-    dst_path: str,
-    *,
-    target_file_mb: int = 256,
-    sort_within_by: list[str] | None = None,
-) -> int:
-    """Small-files compaction: rewrite a parquet directory into
-    ~``target_file_mb`` files (the steady-state maintenance job every
-    large ingest needs — thousands of tiny files destroy scan throughput
-    and NameNode/listing latency at 100 TB).
-
-    File count is derived from the actual on-disk byte size, not row
-    counts; ``sort_within_by`` optionally sorts within partitions so
-    min/max page stats become selective for later scans. Returns the
-    number of output files."""
-    import math
-
-    df = spark.read.parquet(src_path)
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(spark._jsc.hadoopConfiguration())
-    statuses = fs.listStatus(jvm.org.apache.hadoop.fs.Path(src_path))
-    total_bytes = (
-        sum(
-            s.getLen()
-            for s in statuses
-            if s.getPath().getName().endswith(".parquet")
-        )
-        or 1
-    )
-    n_files = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
-    out = df.repartition(n_files)
-    if sort_within_by:
-        out = out.sortWithinPartitions(*sort_within_by)
-    out.write.mode("overwrite").parquet(dst_path)
-    return n_files
-
-
-def write_orc(
-    df,
-    path: str,
-    *,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """ORC sink — columnar alternative to parquet for Hive-compatible
-    consumers; same partitioning guidance as ``write_parquet``."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
-def write_xml(
-    df,
-    path: str,
-    *,
-    row_tag: str = "row",
-    root_tag: str = "rows",
-    mode: str = "overwrite",
-) -> None:
-    """XML sink (native in Spark 4, SPARK-44265) — interop with the
-    XML-feed consumers sheet-era systems often front. One element per row;
-    pair with :func:`ibc_spark.io_.sources.read_xml`."""
-    (
-        df.write.mode(mode)
-        .format("xml")
-        .option("rowTag", row_tag)
-        .option("rootTag", root_tag)
-        .save(path)
-    )

@@ -59,12 +59,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: Iterable[str] = TABLES
-) -> dict[str, DataFrame]:
-    return {name: read_table(spark, sf_dir, name) for name in names}
-
-
 def register_views(spark: SparkSession, sf_dir: str, names: Iterable[str] = TABLES) -> None:
     """Register testdata tables as temp views for the SQL API."""
     for name in names:
@@ -178,128 +172,6 @@ def fetch_sheet_rows(
     return data
 
 
-def read_sheet(
-    spark: SparkSession,
-    url: str,
-    *,
-    params: Mapping[str, str] | None = None,
-    timeout: float = 10.0,
-    transport=None,
-    schema: T.StructType | None = None,
-) -> DataFrame:
-    """S1/S2 source end-to-end: HTTP fetch (:func:`fetch_sheet_rows`) into a
-    schema-tolerant DataFrame (:func:`dataframe_from_rows`)."""
-    rows = fetch_sheet_rows(url, params=params, timeout=timeout, transport=transport)
-    return dataframe_from_rows(spark, rows, schema=schema)
-
-
-def read_json_rows(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    *,
-    multiline: bool = False,
-) -> DataFrame:
-    """JSON-lines (or ``multiline`` array) source with an EXPLICIT schema and
-    permissive corrupt-record capture — the production-scale form of the
-    reference's sheet ingest (S1/S2): bad records land in ``_corrupt_record``
-    as quarantine candidates instead of failing the read, and the explicit
-    schema avoids a full inference pre-pass over 100 TB of input.
-    """
-    full = T.StructType(
-        [*schema.fields, T.StructField("_corrupt_record", T.StringType(), True)]
-    )
-    return (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .option("multiLine", str(multiline).lower())
-        .json(path)
-    )
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    *,
-    header: bool = True,
-    delimiter: str = ",",
-) -> DataFrame:
-    """CSV source, explicit schema, permissive corrupt-record capture.
-    Splittable (parallel) as long as the file is uncompressed or uses a
-    splittable codec — at scale prefer many medium files over one giant one.
-    """
-    full = T.StructType(
-        [*schema.fields, T.StructField("_corrupt_record", T.StringType(), True)]
-    )
-    return (
-        spark.read.schema(full)
-        .option("header", str(header).lower())
-        .option("sep", delimiter)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .csv(path)
-    )
-
-
-def read_binary_files(
-    spark: SparkSession,
-    path: str,
-    *,
-    glob: str | None = None,
-) -> DataFrame:
-    """Opaque-media source: ``binaryFile`` format yields (path, modificationTime,
-    length, content binary) — the ingest face of the multimodal column
-    convention (ext.multimodal). Decode happens downstream in Arrow-batched
-    ``mapInPandas``, never on the driver."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
-
-
-def jdbc_reader(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    *,
-    partition_column: str | None = None,
-    num_partitions: int = 8,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    properties: Mapping[str, str] | None = None,
-):
-    """JDBC dim-table snapshot reader (engine replacement for the
-    reference's per-row SQL lookups, SURVEY S3/J1–J5). With a numeric
-    ``partition_column`` + bounds the scan parallelizes into
-    ``num_partitions`` range slices; without, it is a single-connection
-    read suitable only for small dims. Returns the configured reader (call
-    ``.load()``) so tests can inspect options without a live database."""
-    reader = (
-        spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    )
-    if partition_column is not None:
-        if lower_bound is None or upper_bound is None:
-            raise ValueError("partitioned JDBC read needs lower/upper bounds")
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("numPartitions", str(num_partitions))
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-        )
-    for k, v in (properties or {}).items():
-        reader = reader.option(k, v)
-    return reader
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC source (built into Spark, vectorized reader + predicate pushdown
-    into stripe/row-group statistics, same as parquet). Second columnar
-    format for interop with Hive-era warehouses."""
-    return spark.read.orc(path)
-
-
 def pgwire_parallel_read(
     spark: SparkSession,
     *,
@@ -392,21 +264,3 @@ def pgwire_parallel_read(
             yield pd.concat(frames) if frames else pd.DataFrame(columns=cols)
 
     return slices.mapInPandas(_fetch, schema)
-
-
-def read_xml(
-    spark: SparkSession,
-    path: str,
-    *,
-    row_tag: str = "row",
-    schema: str | None = None,
-) -> DataFrame:
-    """XML source (native in Spark 4, SPARK-44265): one DataFrame row per
-    ``row_tag`` element, attributes surfaced as ``_attr`` columns.
-    Same posture as the CSV/JSON sources: pass ``schema`` in production
-    (inference scans the data twice) and quarantine malformed records
-    downstream rather than failing ingest."""
-    reader = spark.read.format("xml").option("rowTag", row_tag)
-    if schema:
-        reader = reader.schema(schema)
-    return reader.load(path)

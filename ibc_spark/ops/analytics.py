@@ -12,9 +12,10 @@ each gets an oracle-checked registry entry. Scale notes per operator:
   payload forward. This is the linear-time formulation — no range-explosion
   join, no per-row subquery — and the standard way to get point-in-time
   joins on engines without a native ASOF operator.
-- Range (interval) joins against a SMALL bucket table broadcast the buckets
-  (nested-loop against k buckets is O(k) per row, k tiny). For big-big
-  interval joins, bucketize the range into grid cells first.
+- Range lookups into static buckets compile to a CASE projection
+  (:func:`bucketize`), no join at all. Per-interval overlap aggregates over
+  two big interval sets use one sweep-line pass
+  (:func:`interval_overlap_totals`), never the Ω(density²) pair set.
 """
 
 from __future__ import annotations
@@ -188,21 +189,6 @@ def asof_join(
 # ---------------------------------------------------------------------------
 
 
-def range_join_buckets(
-    facts: DataFrame,
-    buckets: DataFrame,
-    *,
-    value_col: str,
-    lo_col: str = "lo",
-    hi_col: str = "hi",
-) -> DataFrame:
-    """Attach a bucket row to each fact where ``lo <= value < hi``. The
-    bucket table is broadcast; the join is a nested loop over k buckets —
-    O(k) per fact row, embarrassingly parallel."""
-    cond = (F.col(value_col) >= F.col(lo_col)) & (F.col(value_col) < F.col(hi_col))
-    return facts.join(F.broadcast(buckets), on=cond, how="left")
-
-
 def bucketize(value, buckets) -> Column:
     """Compile *static* ``[lo, hi) -> label`` buckets into a CASE projection.
 
@@ -210,8 +196,8 @@ def bucketize(value, buckets) -> Column:
     runs as a BroadcastNestedLoopJoin with an interpreted predicate per
     fact row. A ``when()`` chain instead folds the lookup into the scan's
     whole-stage codegen: zero join, zero extra operator — the right plan at
-    any scale. Use :func:`range_join_buckets` only when the bucket table is
-    itself data (computed at runtime).
+    any scale. Only when the bucket table is itself data (computed at
+    runtime) does it need a broadcast non-equi join.
 
     ``buckets`` is a sequence of ``(lo, hi, label)`` triples; values outside
     every bucket map to NULL (caller filters for inner-join semantics).
@@ -224,67 +210,6 @@ def bucketize(value, buckets) -> Column:
     if chain is None:
         return F.lit(None).cast("string")
     return chain
-
-
-def interval_overlap_grid(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    left_start: str,
-    left_end: str,
-    right_start: str,
-    right_end: str,
-    grid: str = "hour",
-) -> DataFrame:
-    """All (left, right) interval pairs that OVERLAP — the key-free interval
-    join, executed as a grid-bucketed EQUI-join instead of the
-    BroadcastNestedLoopJoin a bare inequality predicate compiles to.
-
-    Pattern (the manual form of Databricks' range-join optimization): each
-    interval explodes into the ``grid`` cells it covers (an interval
-    overlapping at instant t puts BOTH sides in t's cell, so no overlap can
-    be missed); the two cell streams hash-equi-join on the cell, the exact
-    predicate ``l.start <= r.end AND r.start <= l.end`` filters
-    false-positive cell-mates, and duplicates from pairs sharing several
-    cells collapse with one distinct.
-
-    Scale posture: candidate volume is Σ_cell |L_cell|·|R_cell| — grid
-    granularity is the dial (finer grid → fewer pairs per cell but wider
-    explodes; pick it near the median interval length). Unlike the naive
-    plan it is shuffle-partitioned by cell and proportional to temporal
-    DENSITY, not |L|·|R|. A key-free interval join's true output is itself
-    Ω(density), so this is within a constant of optimal; when a join key
-    exists, put it in the equi-key alongside the cell instead.
-
-    Requirements: left/right column names must be disjoint, and each
-    side's rows must be distinct (the final dedup is over all columns).
-    Interval ends are inclusive and must satisfy start <= end.
-    """
-    lcell = F.explode(
-        F.sequence(
-            F.date_trunc(grid, F.col(left_start)),
-            F.date_trunc(grid, F.col(left_end)),
-            F.expr(f"interval 1 {grid}"),
-        )
-    ).alias("__cell")
-    rcell = F.explode(
-        F.sequence(
-            F.date_trunc(grid, F.col(right_start)),
-            F.date_trunc(grid, F.col(right_end)),
-            F.expr(f"interval 1 {grid}"),
-        )
-    ).alias("__cell")
-    l = left.select("*", lcell)
-    r = right.select("*", rcell)
-    return (
-        l.join(r, on="__cell")
-        .where(
-            (F.col(left_start) <= F.col(right_end))
-            & (F.col(right_start) <= F.col(left_end))
-        )
-        .drop("__cell")
-        .dropDuplicates()
-    )
 
 
 def interval_overlap_totals(
@@ -304,7 +229,7 @@ def interval_overlap_totals(
 
     The pair set of a key-free overlap query is Ω(density²): at 10× the
     temporal density there are 100× overlapping pairs, so any
-    pair-producing plan (including the grid equi-join above, optimal when
+    pair-producing plan (including a grid-bucketed equi-join, optimal when
     the pairs ARE the output) goes quadratic when only per-interval
     aggregates are needed — measured 2 s → 228 s from sf0.1 → sf1 in the
     round-8 scale sweep. This is the O(n log n) sweep-line formulation

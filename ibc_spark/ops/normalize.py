@@ -11,9 +11,8 @@ spellings and routes renamed columns to per-table allow-lists:
   (``USERS_COLS``/``CONSULTANTS_COLS`` ``staffing-roster-pipeline.py:31-32``;
   the two selects live in ``pipelines/staffing_roster.py``).
 
-Columns the reference silently drops become a loud validation report
-(:func:`schema_report`); the known ``consultant_score`` vs
-``consultants_score`` quirk (SURVEY §1.3) is fixed here, consciously.
+The known ``consultant_score`` vs ``consultants_score`` quirk (SURVEY §1.3)
+is fixed here, consciously.
 """
 
 from __future__ import annotations
@@ -130,14 +129,3 @@ def coalesce_headers(
     if keep_rest:
         out += [F.col(f"`{c}`") for c in have if c not in consumed]
     return df.select(*out)
-
-
-def schema_report(df: DataFrame, expected: Sequence[str]) -> dict[str, list[str]]:
-    """Loud replacement for the reference's silent column drops: which
-    expected columns are missing, and which inputs are unrouted."""
-    have = set(df.columns)
-    exp = set(expected)
-    return {
-        "missing": sorted(exp - have),
-        "unmapped": sorted(have - exp),
-    }

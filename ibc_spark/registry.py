@@ -969,8 +969,8 @@ def range_join_qty_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is a plan-time literal, so it compiles to a ``when()`` chain inside
     the scan's whole-stage codegen — no join operator at all (the broadcast
     nested-loop a literal non-equi join would produce is interpreted per row
-    and was the slowest plan in the repo). ``ops.analytics.range_join_buckets``
-    remains the generic path for runtime bucket tables."""
+    and was the slowest plan in the repo). A runtime bucket table is a
+    broadcast non-equi join."""
     li = read_table(spark, sf_dir, "lineitem").select("l_quantity", "l_extendedprice")
     bucket = bucketize(
         "l_quantity",
@@ -1069,7 +1069,7 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     idle minutes. lag → marker → running sum → group. One shuffle on
     user_id shared by both windows and the final aggregate (same
     partitioning, Catalyst reuses the exchange). Streaming face:
-    ``ibc_spark.streaming.session_window_stream``."""
+    the ``streaming_sessionize`` entry."""
     from pyspark.sql import Window
 
     ev = read_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")

@@ -712,16 +712,15 @@ def interval_overlap_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     it in time, and the summed overlap (co-activity analysis: ad-exposure
     windows, incident blast radius, concurrent-session pricing).
 
-    Round 8 rewrote this from the grid-bucketed pair join
-    (`ops.analytics.interval_overlap_grid`) to the SWEEP-LINE prefix-sum
-    plan (`ops.analytics.interval_overlap_totals`): the pair set of a
+    Round 8 rewrote this from a grid-bucketed pair join to the SWEEP-LINE
+    prefix-sum plan (`ops.analytics.interval_overlap_totals`): the pair set of a
     key-free overlap query is Ω(density²) — the r8 scale sweep measured
     the pair plan at 2 s → 228 s from sf0.1 → sf1 (exponent 2.06, the
     round's one super-linear entry) — but the AGGREGATES need no pairs:
     counts and summed overlaps read off eight prefix values per session
     in one range-partitioned ordered pass (exponent ~linear after the
-    rewrite; the sweep table in COVERAGE.md records both). The grid join
-    remains the right operator when the pairs themselves are the output.
+    rewrite; the sweep table in COVERAGE.md records both). A grid-bucketed
+    equi-join is the operator for when the pairs themselves are the output.
     The DuckDB oracle still runs the naive inequality join + group-by
     (fine at oracle SF), so the sweep-line algebra is hash-attested."""
     from ibc_spark.ops.analytics import interval_overlap_totals

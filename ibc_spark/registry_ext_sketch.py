@@ -296,36 +296,6 @@ def sketch_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def hll_mergeable_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-output face of the mergeable-HLL rollup (the user API shape):
-    one row per priority with (approx_distinct, exact_distinct) plus an
-    'ALL' row whose estimate comes from MERGING the per-priority sketches,
-    never a second scan. Estimates are engine-specific (DuckDB has no
-    DataSketches HLL), so the registry entry below attests this machinery
-    through deterministic invariants instead of value equality; pytest
-    pins the ±5% error bound and merge consistency on THIS frame."""
-    o = read_table(spark, sf_dir, "orders")
-    from ibc_spark.ext.persistreg import persist_tracked
-
-    per = persist_tracked(
-        o.groupBy("o_orderpriority").agg(
-            F.hll_sketch_agg("o_custkey").alias("sk"),
-            F.countDistinct("o_custkey").alias("exact_distinct"),
-        )
-    )
-    parts = per.select(
-        F.col("o_orderpriority").alias("priority"),
-        F.hll_sketch_estimate("sk").alias("approx_distinct"),
-        "exact_distinct",
-    )
-    union_row = per.agg(
-        F.lit("ALL").alias("priority"),
-        F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("approx_distinct"),
-        F.lit(None).cast("long").alias("exact_distinct"),
-    )
-    return parts.unionByName(union_row)
-
-
 @query(
     "sketch_hll_mergeable",
     oracle="""
@@ -357,7 +327,7 @@ def sketch_hll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     that makes stored per-partition sketches trustworthy). The 100 TB
     point is unchanged: store O(KB) sketch bytes per partition/day,
     merge on read; this surface is the audit that the merge algebra
-    holds. Full estimates: :func:`hll_mergeable_sketches`."""
+    holds."""
     o = read_table(spark, sf_dir, "orders")
     from ibc_spark.ext.persistreg import persist_tracked
 
@@ -440,46 +410,6 @@ def _kll_quantile_safe(sk_col: str, q: float, n_col: str = "n_events"):
     )
 
 
-def kll_mergeable_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-output face of the mergeable-KLL quantile rollup: per-type
-    (approx_p50, approx_p95, exact_p50, n_events) rows plus an 'ALL' row
-    whose quantiles come from MERGING the per-type sketches. Estimates are
-    engine-specific; the registry entry attests the machinery through
-    deterministic invariants, pytest pins the error bounds on THIS frame."""
-    ev = read_table(spark, sf_dir, "events")
-    from ibc_spark.ext.persistreg import persist_tracked
-
-    per = persist_tracked(
-        ev.groupBy("event_type").agg(
-            F.kll_sketch_agg_double("value").alias("sk"),
-            F.expr("percentile(value, 0.5)").alias("exact_p50"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-    )
-    parts = per.select(
-        "event_type",
-        F.round(F.kll_sketch_get_quantile_double(F.col("sk"), F.lit(0.5)), 6).alias(
-            "approx_p50"
-        ),
-        F.round(F.kll_sketch_get_quantile_double(F.col("sk"), F.lit(0.95)), 6).alias(
-            "approx_p95"
-        ),
-        F.round(F.col("exact_p50").cast("double"), 6).alias("exact_p50"),
-        "n_events",
-    )
-    merged = per.agg(
-        F.kll_merge_agg_double("sk").alias("msk"),
-        F.sum("n_events").alias("n_events"),
-    ).select(
-        F.lit("ALL").alias("event_type"),
-        F.round(_kll_quantile_safe("msk", 0.5), 6).alias("approx_p50"),
-        F.round(_kll_quantile_safe("msk", 0.95), 6).alias("approx_p95"),
-        F.lit(None).cast("double").alias("exact_p50"),
-        "n_events",
-    )
-    return parts.unionByName(merged)
-
-
 @query(
     "sketch_kll_mergeable",
     oracle="""
@@ -513,8 +443,7 @@ def sketch_kll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarantee at the default k leaves ≥2.5× margin even under compaction
     randomness). The 'ALL' row proves the MERGED per-type sketches track
     the exact global quantiles under the same bounds — the property that
-    makes stored per-partition quantile sketches composable at 100 TB.
-    Full estimates: :func:`kll_mergeable_sketches`."""
+    makes stored per-partition quantile sketches composable at 100 TB."""
     ev = read_table(spark, sf_dir, "events")
     from ibc_spark.ext.persistreg import persist_tracked
 
@@ -566,44 +495,6 @@ def sketch_kll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     return parts.unionByName(all_row)
 
 
-def theta_setops_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-output face of the Theta set-operation sketches: per-type
-    (approx_distinct, exact_distinct) rows plus a click∪purchase row
-    carrying the derived intersection estimate. Estimates are
-    engine-specific; the registry entry attests the machinery through
-    deterministic invariants, pytest pins the error bounds on THIS frame."""
-    ev = read_table(spark, sf_dir, "events")
-    from ibc_spark.ext.persistreg import persist_tracked
-
-    per = persist_tracked(
-        ev.where(F.col("event_type").isin("click", "purchase"))
-        .groupBy("event_type")
-        .agg(
-            F.theta_sketch_agg("user_id").alias("sk"),
-            F.count_distinct("user_id").alias("exact_distinct"),
-        )
-    )
-    parts = per.select(
-        "event_type",
-        F.round(F.theta_sketch_estimate("sk"), 2).alias("approx_distinct"),
-        "exact_distinct",
-        F.lit(None).cast("double").alias("approx_intersection"),
-    )
-    union_row = per.agg(
-        F.lit("click_union_purchase").alias("event_type"),
-        F.round(F.theta_sketch_estimate(F.theta_union_agg("sk")), 2).alias(
-            "approx_distinct"
-        ),
-        F.lit(None).cast("long").alias("exact_distinct"),
-        F.round(
-            F.sum(F.theta_sketch_estimate("sk"))
-            - F.theta_sketch_estimate(F.theta_union_agg("sk")),
-            2,
-        ).alias("approx_intersection"),
-    )
-    return parts.unionByName(union_row)
-
-
 @query(
     "sketch_theta_setops",
     oracle="""
@@ -646,8 +537,7 @@ def sketch_theta_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     are excluded on both engines (count(DISTINCT) drops them; so does
     the sketch agg). This is the 100 TB audience-overlap audit: stored
     per-segment sketches answer |A|, |B|, |A∪B|, |A∩B| without a second
-    scan, and this surface proves the set algebra against ground truth.
-    Full estimates: :func:`theta_setops_sketches`."""
+    scan, and this surface proves the set algebra against ground truth."""
     ev = read_table(spark, sf_dir, "events")
     from ibc_spark.ext.persistreg import persist_tracked
 

@@ -380,20 +380,6 @@ def bm25_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def compression_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-output face of the compression-ratio quality signal: one row
-    per document with its deflate ratio (``ext.text.compression_ratio``,
-    the user API). zlib is engine-specific, so the registry entry below
-    attests this machinery through deterministic invariants; pytest pins
-    the discriminative ordering and run-to-run determinism on THIS frame."""
-    d = read_table(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.round(text.compression_ratio("text"), 6).alias("compression_ratio"),
-        F.col("n_chars"),
-    )
-
-
 @query(
     "text_compression_ratio",
     oracle="""
@@ -427,7 +413,7 @@ def text_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Both violation counts are 0 by zlib's algebra on ANY data, so the
     oracle states them as constants; the data-derived counts prove the
-    scan covered the corpus. Per-doc ratios: :func:`compression_ratios`
+    scan covered the corpus. Per-doc ratios: ``ext.text.compression_ratio``
     (pytest pins discrimination + determinism)."""
     d = read_table(spark, sf_dir, "documents")
     scored = d.select(

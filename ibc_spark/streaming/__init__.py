@@ -2,9 +2,11 @@
 
 The reference has zero streaming code (SURVEY §2.7). This package re-expresses
 the engine's operator library under Structured Streaming over the ``events``
-testdata table: the same logical plans run via ``readStream`` with watermarks,
-windowed aggregation, streaming dedup, ``foreachBatch`` MERGE sinks, and an
-``applyInPandasWithState`` custom stateful operator.
+and ``documents`` testdata tables: ``readStream`` sources with the batch
+schema, watermarked streaming dedup, ``foreachBatch`` MERGE and DB upsert
+sinks, and an ``applyInPandasWithState`` KMV sketch. The windowed, joined
+and stateful ``streaming_*`` registry entries build their plans inline over
+these sources.
 
 Scale posture: file-source streams discover new files incrementally (no
 re-listing cost per batch at 100 TB when ``maxFilesPerTrigger`` bounds batch
@@ -13,24 +15,12 @@ watermarks bound state size — nothing here accumulates unbounded driver state.
 """
 
 from ibc_spark.streaming.sources import read_events_stream
-from ibc_spark.streaming.windows import (
-    hourly_rollup_stream,
-    session_window_stream,
-    sliding_window_stream,
-)
 from ibc_spark.streaming.dedup import dedup_events_stream
-from ibc_spark.streaming.joins import clicks_to_purchases_stream
 from ibc_spark.streaming.merge_sink import foreach_batch_merge, run_merge_stream
-from ibc_spark.streaming.stateful import running_user_totals
 
 __all__ = [
     "read_events_stream",
-    "hourly_rollup_stream",
-    "sliding_window_stream",
-    "session_window_stream",
-    "clicks_to_purchases_stream",
     "dedup_events_stream",
     "foreach_batch_merge",
     "run_merge_stream",
-    "running_user_totals",
 ]

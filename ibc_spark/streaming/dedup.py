@@ -16,25 +16,3 @@ from pyspark.sql import DataFrame
 def dedup_events_stream(events: DataFrame, *, watermark: str = "2 hours") -> DataFrame:
     """Keep the first occurrence of each event_id within the watermark."""
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
-
-
-def dedup_content_stream(
-    docs: DataFrame, *, ts_col: str = "ingest_ts", watermark: str = "24 hours"
-) -> DataFrame:
-    """Streaming twin of ``dedup_exact_content_sha`` (first occurrence of
-    each SHA-256 content address wins): the dedup-at-ingest stage of a
-    continuously-fed corpus, where batch re-dedup of the whole archive per
-    feed increment would be quadratic in total ingest.
-
-    ``dropDuplicatesWithinWatermark`` keys the state store on the 64-char
-    digest, never the body, and the watermark bounds state to the arrival
-    horizon — the only sustainable form for an unbounded corpus (a mirror
-    that re-sends content AFTER the horizon re-ingests it; cross-horizon
-    protection is the batch content-address pass downstream)."""
-    from pyspark.sql import functions as F
-
-    return (
-        docs.withColumn("content_sha", F.sha2(F.col("text"), 256))
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["content_sha"])
-    )

@@ -12,8 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ibc_spark.io_.sources import read_table
-
 
 def _stream_table(reader, sf_dir: str, table: str) -> DataFrame:
     """Open ``{sf_dir}/{table}.parquet`` as a file-source stream whether it
@@ -66,12 +64,6 @@ def read_events_stream(
         # preserves the instant and matches the batch face (read_table)
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def batch_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The equivalent bounded frame — used by tests to check stream results
-    against the batch plan."""
-    return read_table(spark, sf_dir, "events")
 
 
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

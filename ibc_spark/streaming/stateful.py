@@ -1,10 +1,10 @@
 """Custom stateful streaming operator via ``applyInPandasWithState``.
 
-Running per-user totals with explicit state — the pattern for operators the
-built-in windowed aggs can't express (counters that never reset, custom
-session logic, model-state updates). State is partitioned by key across
-executors; each key's state is an O(1) tuple, so state size is O(#users)
-regardless of event volume — the scalable shape for per-entity accumulators.
+A streaming KMV distinct-count sketch: the stateful-streaming face of the
+portable KMV family (``approx_sketch_stats`` / ``sketch_kmv_rollup_merge``),
+run by the ``streaming_sketch_kmv`` entry. State is partitioned by key
+across executors and each key holds O(k) longs, so state size is bounded
+regardless of event volume.
 """
 
 from __future__ import annotations
@@ -12,8 +12,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -21,111 +20,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-STATE_SCHEMA = StructType(
-    [StructField("n", LongType()), StructField("total", DoubleType())]
-)
-OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-    ]
-)
-
-
-def _update_user_totals(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (n, total) = state.get if state.exists else (0, 0.0)
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 2)]}
-    )
-
-
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Emit the running (n_events, total_value) per user after each batch."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update_user_totals,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4, SPARK-49564) — the successor API to
-# applyInPandasWithState above: named typed state variables (ValueState /
-# ListState / MapState) with per-variable TTL instead of one packed tuple,
-# and an object-oriented processor with init/close lifecycle. Both forms are
-# kept: the GroupState form is the widely-deployed API; this is where new
-# stateful operators should land.
-# ---------------------------------------------------------------------------
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-
-TWS_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("max_value", DoubleType()),
-    ]
-)
-
-
-class UserPeakProcessor(StatefulProcessor):
-    """Running per-user event count + peak value via two named ValueState
-    variables. State is O(1) per user; TTL-free (counters never reset)."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._n = handle.getValueState("n", "n LONG")
-        self._peak = handle.getValueState("peak", "peak DOUBLE")
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        n = self._n.get()[0] if self._n.exists() else 0
-        peak = self._peak.get()[0] if self._peak.exists() else float("-inf")
-        for pdf in rows:
-            n += len(pdf)
-            if len(pdf):
-                peak = max(peak, float(pdf["value"].max()))
-        self._n.update((n,))
-        self._peak.update((peak,))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "max_value": [peak]}
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_user_peaks(events: DataFrame) -> DataFrame:
-    """Emit the running (n_events, max_value) per user after each batch —
-    same semantics family as :func:`running_user_totals`, expressed in the
-    transformWithStateInPandas API.
-
-    Runtime requirements (not needed by the GroupState form): the RocksDB
-    state store provider (`spark.sql.streaming.stateStore.providerClass`)
-    and the python protobuf runtime for the state-server protocol — the
-    equivalence test skips where protobuf is unavailable."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        UserPeakProcessor(),
-        outputStructType=TWS_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming KMV distinct-count sketch (round 8): the stateful-streaming face
-# of the portable KMV family (approx_sketch_stats / sketch_kmv_rollup_merge).
-# ---------------------------------------------------------------------------
 
 def kmv_stream_schemas():
     from pyspark.sql.types import ArrayType, StringType

@@ -37,8 +37,10 @@ CLI:
 
 from __future__ import annotations
 
+import dis
 import glob
 import hashlib
+import importlib
 import inspect
 import json
 import os
@@ -83,11 +85,43 @@ def _module_file_hash(mod: types.ModuleType, cache: dict[str, str]) -> str:
     return cache[path]
 
 
+def _code_objects(code: types.CodeType):
+    """``code`` and every code object nested in it, at any depth."""
+    yield code
+    for const in code.co_consts:
+        if isinstance(const, types.CodeType):
+            yield from _code_objects(const)
+
+
+def _local_imports(code: types.CodeType) -> dict[str, object]:
+    """Objects bound by function-local ``from ibc_spark… import name``
+    statements in ``code`` or its nested code objects, by imported name.
+    Such names never reach ``__globals__``, so without this an entry that
+    imports its helpers inside its body hashes none of them."""
+    found: dict[str, object] = {}
+    for c in _code_objects(code):
+        ins = list(dis.get_instructions(c))
+        for prev, cur in zip(ins, ins[1:]):
+            mod_name = cur.argval if cur.opname == "IMPORT_NAME" else ""
+            if not (mod_name == "ibc_spark" or mod_name.startswith("ibc_spark.")):
+                continue
+            if not isinstance(prev.argval, tuple):  # plain ``import x.y``
+                continue
+            mod = importlib.import_module(mod_name)
+            for name in prev.argval:
+                obj = getattr(mod, name, None)
+                if obj is None:  # a submodule not yet imported
+                    obj = importlib.import_module(f"{mod_name}.{name}")
+                found[name] = obj
+    return found
+
+
 def _closure_parts(fn, *, parts: dict[str, str], cache: dict[str, str]) -> None:
     """Collect ``qualified-name -> content-hash`` for every ibc_spark
     function/class reachable from ``fn`` through referenced global names
-    (recursive, cycle-safe), and file hashes for referenced ibc_spark
-    modules. Nested defs are covered textually by ``getsource``."""
+    and function-local ``from ibc_spark… import`` names (recursive,
+    cycle-safe), and file hashes for referenced ibc_spark modules. Nested
+    defs are covered textually by ``getsource``."""
     key = f"{fn.__module__}.{getattr(fn, '__qualname__', fn.__name__)}"
     if key in parts:
         return
@@ -104,8 +138,10 @@ def _closure_parts(fn, *, parts: dict[str, str], cache: dict[str, str]) -> None:
         if isinstance(const, types.CodeType):
             names.update(const.co_names)
     globs = getattr(fn, "__globals__", {})
-    for name in sorted(names):
-        obj = globs.get(name)
+    objs = {name: globs.get(name) for name in names}
+    objs.update(_local_imports(code))
+    for name in sorted(objs):
+        obj = objs[name]
         if obj is None:
             continue
         if isinstance(obj, types.ModuleType):

@@ -1,5 +1,6 @@
-"""Unit tests for ops.analytics (windows, as-of join, range join) on
-handcrafted frames where the expected result is computable by eye.
+"""Unit tests for ops.analytics (windows, as-of join, range buckets,
+interval overlap) on handcrafted frames where the expected result is
+computable by eye.
 Registry-level oracle parity for the same operators is covered by
 test_oracle_parity via the driver contract."""
 
@@ -12,8 +13,8 @@ from pyspark.sql import functions as F
 
 from ibc_spark.ops.analytics import (
     asof_join,
+    bucketize,
     lag_lead_delta,
-    range_join_buckets,
     rank_in_groups,
     running_total,
 )
@@ -154,18 +155,22 @@ def test_lag_lead_and_running_total(spark):
     assert rt == {1: 10.0, 2: 30.0, 3: 35.0, 4: 7.0}
 
 
-def test_range_join_buckets_edges(spark):
+def test_bucketize_edges(spark):
+    """Static ``[lo, hi)`` buckets: lo inclusive, hi exclusive, a value
+    outside every bucket maps to NULL, and no buckets at all is a NULL
+    string column."""
     facts = spark.createDataFrame(
         [(0.0,), (9.99,), (10.0,), (49.0,), (99.0,)], "v double"
     )
-    buckets = spark.createDataFrame(
-        [(0.0, 10.0, "low"), (10.0, 50.0, "high")], "lo double, hi double, bucket string"
-    )
+    buckets = [(0.0, 10.0, "low"), (10.0, 50.0, "high")]
     out = {
         r["v"]: r["bucket"]
-        for r in range_join_buckets(facts, buckets, value_col="v").collect()
+        for r in facts.select("v", bucketize("v", buckets).alias("bucket")).collect()
     }
     assert out == {0.0: "low", 9.99: "low", 10.0: "high", 49.0: "high", 99.0: None}
+    none = facts.select(bucketize("v", []).alias("b"))
+    assert none.schema["b"].dataType.simpleString() == "string"
+    assert {r["b"] for r in none.collect()} == {None}
 
 
 def test_scd2_apply_semantics(spark):
@@ -233,51 +238,6 @@ def test_recursive_cte_matches_duckdb(spark, duck):
     want = sorted(tuple(r) for r in duck.execute(sql).fetchall())
     assert got == [(n, int(v)) for n, v in want]
     assert got[29] == (30, 514229)
-
-
-def test_interval_overlap_grid_equals_naive_join(spark):
-    """The grid-bucketed interval-overlap join must return EXACTLY the
-    naive inequality-join pair set on a seeded random fixture that
-    includes zero-length intervals, intervals exactly touching grid-cell
-    boundaries, and multi-cell spans (the dedup path)."""
-    import datetime as dt
-    import random
-
-    from pyspark.sql import functions as F
-
-    from ibc_spark.ops.analytics import interval_overlap_grid
-
-    rng = random.Random(7)
-    base = dt.datetime(2024, 3, 1)
-
-    def mk(n, prefix):
-        rows = []
-        for i in range(n):
-            start = base + dt.timedelta(minutes=rng.randrange(0, 48 * 60))
-            # mix: zero-length, sub-hour, multi-hour; some aligned to :00
-            dur = rng.choice([0, 1, 17, 59, 60, 61, 179])
-            if rng.random() < 0.3:
-                start = start.replace(minute=0, second=0)
-            rows.append((f"{prefix}{i}", start, start + dt.timedelta(minutes=dur)))
-        return rows
-
-    l = spark.createDataFrame(mk(80, "L"), "lid string, ls timestamp, le timestamp")
-    r = spark.createDataFrame(mk(80, "R"), "rid string, rs timestamp, re timestamp")
-
-    got = {
-        (x["lid"], x["rid"])
-        for x in interval_overlap_grid(
-            l, r, left_start="ls", left_end="le", right_start="rs", right_end="re"
-        ).collect()
-    }
-    naive = {
-        (x["lid"], x["rid"])
-        for x in l.crossJoin(r)
-        .where((F.col("ls") <= F.col("re")) & (F.col("rs") <= F.col("le")))
-        .collect()
-    }
-    assert naive  # non-vacuous
-    assert got == naive
 
 
 def test_interval_overlap_totals_equals_pair_enumeration(spark):

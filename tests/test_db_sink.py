@@ -8,7 +8,7 @@ import sqlite3
 
 import pytest
 
-from ibc_spark.io_.sinks import dbapi_upsert, jdbc_writer, upsert_sql
+from ibc_spark.io_.sinks import dbapi_upsert, upsert_sql
 
 DDL = """
 CREATE TABLE users (
@@ -131,14 +131,6 @@ def test_key_column_validation(spark, db):
         dbapi_upsert(
             df, table="users", key_cols="nope", connection_factory=lambda: None
         )
-
-
-def test_jdbc_writer_configures(spark):
-    df = spark.createDataFrame([(1,)], "a long")
-    w = jdbc_writer(
-        df, "jdbc:postgresql://h/db", "users", batchsize=512, properties={"user": "u"}
-    )
-    assert w is not None  # configured writer; .save() needs a driver jar
 
 
 # ---------------------------------------------------------------------------

@@ -71,6 +71,18 @@ def test_closure_hash_sees_helper_modules():
         assert parts[key] == hashlib.md5(fh.read()).hexdigest()
 
 
+def test_closure_hash_sees_function_local_imports():
+    """An entry that imports its helper inside its body must hash that
+    helper: the streaming entries bind ``read_events_stream`` with a
+    function-local ``from ibc_spark… import``, so an edit to
+    ``streaming/sources.py`` has to flag them."""
+    from ibc_spark.registry import QUERIES
+
+    parts: dict[str, str] = {}
+    em._closure_parts(QUERIES["streaming_hourly_rollup"], parts=parts, cache={})
+    assert "ibc_spark.streaming.sources.read_events_stream" in parts
+
+
 def test_closure_hash_sees_oracle_text():
     from ibc_spark.registry import ORACLES
 

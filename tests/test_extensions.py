@@ -1107,17 +1107,18 @@ def test_compression_ratio_discriminates_and_is_deterministic(spark):
     )
     import tempfile, os
 
-    from ibc_spark.registry_ext_text import compression_ratios
+    from ibc_spark.ext.text import compression_ratio
 
     with tempfile.TemporaryDirectory() as tmp:
         df.write.mode("overwrite").parquet(os.path.join(tmp, "documents.parquet"))
+        docs = spark.read.parquet(os.path.join(tmp, "documents.parquet"))
         got = {
-            r["doc_id"]: r["compression_ratio"]
-            for r in compression_ratios(spark, tmp).collect()
+            r["doc_id"]: r["r"]
+            for r in docs.select("doc_id", compression_ratio("text").alias("r")).collect()
         }
         again = {
-            r["doc_id"]: r["compression_ratio"]
-            for r in compression_ratios(spark, tmp).collect()
+            r["doc_id"]: r["r"]
+            for r in docs.select("doc_id", compression_ratio("text").alias("r")).collect()
         }
         # the attestation entry's invariants hold on constructed data too
         att = QUERIES["text_compression_ratio"](spark, tmp).collect()[0]

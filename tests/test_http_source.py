@@ -9,7 +9,7 @@ import json
 import pytest
 
 from ibc_spark.errors import InvalidFormatError, SheetReadError
-from ibc_spark.io_.sources import fetch_sheet_rows, read_sheet
+from ibc_spark.io_.sources import dataframe_from_rows, fetch_sheet_rows
 
 ROWS = [{"Name": "Alice", "Email": "a@x.edu"}, {"Name": "Bob"}]
 
@@ -68,7 +68,7 @@ def test_empty_sheet_is_empty_list():
 
 
 def test_read_sheet_to_dataframe(spark):
-    df = read_sheet(spark, "https://x", transport=ok_transport)
+    df = dataframe_from_rows(spark, fetch_sheet_rows("https://x", transport=ok_transport))
     assert df.count() == 2
     assert set(df.columns) == {"Name", "Email"}
     assert df.where(df.Email.isNull()).count() == 1  # missing key -> NULL

@@ -337,8 +337,9 @@ def test_streaming_foreach_batch_upsert_into_real_postgres(spark, pg_port):
 
     from pyspark.sql import functions as F
 
+    from ibc_spark.io_.sources import read_table
     from ibc_spark.streaming.merge_sink import foreach_batch_db_upsert
-    from ibc_spark.streaming.sources import batch_events, read_events_stream
+    from ibc_spark.streaming.sources import read_events_stream
 
     setup = _connect(pg_port)
     cur = setup.cursor()
@@ -371,7 +372,7 @@ def test_streaming_foreach_batch_upsert_into_real_postgres(spark, pg_port):
             )
             q.awaitTermination()
 
-    expected = batch_events(spark, SF_SMOKE).select(*cols)
+    expected = read_table(spark, SF_SMOKE, "events").select(*cols)
     n = expected.count()
     check = _connect(pg_port)
     cur = check.cursor()

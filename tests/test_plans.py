@@ -143,34 +143,17 @@ def test_bucketed_join_no_shuffle(spark, tmp_path):
 def test_partition_pruning(spark, tmp_path):
     """Date-partitioned layout prunes scans to matching directories —
     the on-disk analogue of predicate pushdown."""
-    from ibc_spark.io_.sinks import write_parquet
-
     ev = read_table(spark, SF_SMOKE, "events").withColumn(
         "day", F.to_date("ts")
     )
     path = str(tmp_path / "ev_by_day")
-    write_parquet(ev, path, partition_by=["day"])
+    ev.write.partitionBy("day").parquet(path)
     scan = spark.read.parquet(path).where(F.col("day") == "2024-01-03")
     plan = plan_of(scan)
     assert "PartitionFilters" in plan
     seg = plan.split("PartitionFilters: ")[1].split("\n")[0]
     assert "day" in seg
     assert scan.count() > 0
-
-
-def test_compact_parquet_reduces_files(spark, tmp_path):
-    from ibc_spark.io_.sinks import compact_parquet
-
-    src = str(tmp_path / "fragmented")
-    read_table(spark, SF_SMOKE, "events").repartition(24).write.parquet(src)
-    import glob
-
-    assert len(glob.glob(f"{src}/*.parquet")) == 24
-    dst = str(tmp_path / "compacted")
-    n = compact_parquet(spark, src, dst, target_file_mb=256, sort_within_by=["ts"])
-    assert n == 1  # tiny input compacts to one right-sized file
-    assert len(glob.glob(f"{dst}/*.parquet")) == 1
-    assert spark.read.parquet(dst).count() == read_table(spark, SF_SMOKE, "events").count()
 
 
 def test_q6_full_pushdown_single_scan(spark):

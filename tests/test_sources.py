@@ -1,81 +1,13 @@
-"""Source-reader tests: explicit-schema permissive reads with corrupt-record
-quarantine, binaryFile ingest, and JDBC reader configuration."""
+"""Source tests: schema-tolerant sheet-row ingest, the custom ``sheet``
+DataSource (batch and streaming), and the events read on a fresh session."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ibc_spark.io_.sources import (
-    dataframe_from_rows,
-    jdbc_reader,
-    read_binary_files,
-    read_csv,
-    read_json_rows,
-)
-
-SCHEMA = T.StructType(
-    [
-        T.StructField("name", T.StringType()),
-        T.StructField("score", T.LongType()),
-    ]
-)
-
-
-def test_read_json_rows_quarantines_bad_records(spark, tmp_path):
-    p = tmp_path / "rows.jsonl"
-    p.write_text(
-        '{"name": "alice", "score": 10}\n'
-        'this is not json\n'
-        '{"name": "bob", "score": "NaNish"}\n'
-    )
-    df = read_json_rows(spark, str(p), SCHEMA)
-    rows = df.collect()
-    assert len(rows) == 3
-    good = [r for r in rows if r["_corrupt_record"] is None]
-    bad = [r for r in rows if r["_corrupt_record"] is not None]
-    assert [(r["name"], r["score"]) for r in good] == [("alice", 10)]
-    assert len(bad) == 2  # malformed line + type-mismatched score
-
-
-def test_read_csv_quarantines_bad_records(spark, tmp_path):
-    p = tmp_path / "rows.csv"
-    p.write_text("name,score\nalice,10\nbob,notanumber\n")
-    df = read_csv(spark, str(p), SCHEMA)
-    rows = df.collect()
-    good = [r for r in rows if r["_corrupt_record"] is None]
-    bad = [r for r in rows if r["_corrupt_record"] is not None]
-    assert [(r["name"], r["score"]) for r in good] == [("alice", 10)]
-    assert len(bad) == 1 and "notanumber" in bad[0]["_corrupt_record"]
-
-
-def test_read_binary_files(spark, tmp_path):
-    (tmp_path / "a.bin").write_bytes(b"\x00\x01\x02")
-    (tmp_path / "b.txt").write_bytes(b"hello")
-    df = read_binary_files(spark, str(tmp_path), glob="*.bin")
-    rows = df.select("path", "length", "content").collect()
-    assert len(rows) == 1
-    assert rows[0]["length"] == 3 and bytes(rows[0]["content"]) == b"\x00\x01\x02"
-
-
-def test_jdbc_reader_requires_bounds(spark):
-    import pytest
-
-    with pytest.raises(ValueError):
-        jdbc_reader(spark, "jdbc:postgresql://x/db", "users", partition_column="id")
-    # configured reader builds without touching a database
-    r = jdbc_reader(
-        spark,
-        "jdbc:postgresql://x/db",
-        "users",
-        partition_column="id",
-        lower_bound=0,
-        upper_bound=1000,
-        num_partitions=4,
-    )
-    assert r is not None
+from ibc_spark.io_.sources import dataframe_from_rows
 
 
 def test_dataframe_from_rows_union_schema(spark):
@@ -101,24 +33,6 @@ def test_dataframe_from_rows_typed_schema_and_empty_sheet(spark):
     # an empty sheet is an empty frame (the pipelines' no-op batch)
     assert dataframe_from_rows(spark, []).isEmpty()
     assert dataframe_from_rows(spark, [], schema).columns == ["n", "s"]
-
-
-def test_orc_roundtrip_pushdown(spark, tmp_path):
-    from ibc_spark.io_.sinks import write_orc
-    from ibc_spark.io_.sources import read_orc, read_table
-    from tests.conftest import SF_SMOKE
-
-    path = str(tmp_path / "orders_orc")
-    orders = read_table(spark, SF_SMOKE, "orders")
-    write_orc(orders, path, partition_by=["o_orderstatus"])
-    back = read_orc(spark, path)
-    assert back.count() == orders.count()
-    # partition pruning: only one status directory is scanned
-    pruned = back.where(F.col("o_orderstatus") == "O")
-    plan = pruned._sc._jvm.PythonSQLUtils.explainString(
-        pruned._jdf.queryExecution(), "formatted"
-    )
-    assert "PartitionFilters" in plan and "o_orderstatus" in plan
 
 
 # ---------------------------------------------------------------------------
@@ -255,27 +169,6 @@ def test_sheet_streaming_source_typed_schema(spark, tmp_path):
         assert sorted(spark.table("sheet_typed_stream").collect()) == want
     finally:
         spark.catalog.dropTempView("sheet_typed_stream")
-
-
-def test_xml_source_sink_round_trip(spark, tmp_path):
-    """Native Spark-4 XML: write one element per row, read back with a
-    pinned schema — types and NULLs preserved (empty-string column comes
-    back NULL in XML, matching the sheet-era blank semantics the
-    validators normalize anyway)."""
-    from ibc_spark.io_.sinks import write_xml
-    from ibc_spark.io_.sources import read_xml
-
-    rows = [(1, "Alice", 7.5, True), (2, "it's <xml> & stuff", 0.0, False), (3, None, None, None)]
-    df = spark.createDataFrame(rows, "id long, name string, score double, ok boolean")
-    path = str(tmp_path / "x")
-    write_xml(df, path, row_tag="person", root_tag="people")
-    back = read_xml(
-        spark, path, row_tag="person", schema="id long, name string, score double, ok boolean"
-    )
-    got = sorted(
-        (r["id"], r["name"], r["score"], r["ok"]) for r in back.collect()
-    )
-    assert got == sorted(rows)
 
 
 def test_events_read_on_unconfigured_session(spark):

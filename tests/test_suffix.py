@@ -149,7 +149,7 @@ def test_lrs_finds_planted_duplicate(spark):
 
 def test_control_char_corpus_dispatches_to_exact_general_path(spark):
     """A token containing a sub-0x20 byte voids the joined-string order
-    equivalence; _sizes must detect it and _sa_core must take the
+    equivalence; _sizes_of must detect it and _sa_core must take the
     array-keyed general path, which stays exact for any alphabet."""
     docs = [
         (0, "aa \x01zz aa bb cc dd"),
@@ -158,7 +158,8 @@ def test_control_char_corpus_dispatches_to_exact_general_path(spark):
     ]
     rank, adjexp = _brute(docs)
     df = spark.createDataFrame(docs, ["doc_id", "text"])
-    assert not sx._sizes(df, "text")[3], "control chars must clear flat_ok"
+    corpus = sx._corpus(df, id_col="doc_id", text_col="text")
+    assert not sx._sizes_of(corpus)[3], "control chars must clear flat_ok"
     res = sx.suffix_array_ranks(df, id_col="doc_id", text_col="text").collect()
     for r in res:
         assert rank[(r.doc_id, r.pos)] == r.sa_rank
